@@ -321,117 +321,12 @@ def _bytes_logical_cast(arr: pa.Array, t: pa.DataType) -> pa.Array:
 
 def chunk_value_counts(payload: bytes, meta: dict, n: int,
                        mask: np.ndarray | None = None) -> pa.Table:
-    """Partial ``(value, cnt)`` pairs for one chunk — GROUP BY pushed to
-    the codec layer (engine.value_counts_table is the reduce side).
-
-    Fast paths never materialize the n-row column:
-
-    - dict/dictfsst: decode only the (small) dictionary store and bincount
-      the bit-packed code stream against it;
-    - rle/hybrid: the run values WITH their run lengths already ARE a
-      partial count (values may repeat across runs — the caller's groupBy
-      sums them, so no per-chunk combine is needed);
-    - anything else: full decode + Arrow value_counts (vectorized).
-
-    Null rows surface as a null-value row (SQL GROUP BY groups nulls).
-    Counts are partial per chunk by contract.
-
-    ``mask`` (bool[n], from the predicate machinery) restricts the counts
-    to matching rows: dict chunks mask the CODE stream (still no n-row
-    materialization); other codecs fall back to decode+filter.
-    """
-    import pyarrow.compute as pc
-
-    codec = meta["codec"]
-    nulls = int(meta["nulls"])
-    n_valid = n - nulls
-    t = parse_type(meta["type"])
-    m = meta["m"]
-    if mask is not None:
-        if is_bytes_type(t) and codec in ("dict", "dictfsst") and n_valid:
-            validity, body = unpack_sections(payload)
-            dict_payload, code_payload = unpack_sections(body)
-            _, sub_dec = bytescodecs.BYTES_CODECS[m.get("sub", "plain")]
-            ndv = int(m["ndv"])
-            d_lens, d_data = sub_dec(dict_payload, m["dict"], ndv)
-            codes = bitpack.unpack(code_payload, int(m["width"]),
-                                   n_valid).astype(np.int64)
-            if nulls:  # null group takes code ndv (as in chunk_group_sums)
-                gmask = unpack_validity(validity, n)
-                full = np.full(n, ndv, dtype=np.int64)
-                full[gmask] = codes
-                codes = full
-            counts_full = np.bincount(codes[mask],
-                                      minlength=ndv + (1 if nulls else 0))
-            null_cnt = int(counts_full[ndv]) if nulls else 0
-            counts = counts_full[:ndv]
-            values = _bytes_logical_cast(
-                bytescodecs.parts_to_arrow(d_lens, d_data), t)
-            keep = counts > 0
-            if not keep.all():
-                values = values.filter(pa.array(keep))
-                counts = counts[keep]
-        else:
-            arr = decode_array(payload, meta, n).filter(pa.array(mask))
-            null_cnt = arr.null_count
-            vc = pc.value_counts(arr.drop_null() if null_cnt else arr)
-            values = vc.field("values")
-            counts = np.asarray(vc.field("counts"), dtype=np.int64)
-        out_vals = [values] if len(values) else []
-        out_cnts = ([pa.array(np.asarray(counts, dtype=np.int64))]
-                    if len(values) else [])
-        if null_cnt:
-            out_vals.append(pa.array([None], type=t))
-            out_cnts.append(pa.array([null_cnt], type=pa.int64()))
-        if not out_vals:
-            return pa.table({"value": pa.array([], type=t),
-                             "cnt": pa.array([], type=pa.int64())})
-        return pa.table(
-            {"value": pa.concat_arrays(
-                [a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a
-                 for a in out_vals]),
-             "cnt": pa.concat_arrays(out_cnts)})
-    values: pa.Array | None = None
-    counts: np.ndarray | None = None
-    if is_bytes_type(t) and codec in ("dict", "dictfsst") and n_valid:
-        _, body = unpack_sections(payload)
-        dict_payload, code_payload = unpack_sections(body)
-        _, sub_dec = bytescodecs.BYTES_CODECS[m.get("sub", "plain")]
-        d_lens, d_data = sub_dec(dict_payload, m["dict"], int(m["ndv"]))
-        codes = bitpack.unpack(code_payload, int(m["width"]), n_valid)
-        counts = np.bincount(codes.astype(np.int64), minlength=int(m["ndv"]))
-        values = _bytes_logical_cast(
-            bytescodecs.parts_to_arrow(d_lens, d_data), t)
-        keep = counts > 0
-        if not keep.all():
-            values = values.filter(pa.array(keep))
-            counts = counts[keep]
-    elif is_bytes_type(t) and codec in ("rle", "hybrid") and n_valid:
-        _, body = unpack_sections(payload)
-        val_payload, len_payload = unpack_sections(body)
-        n_runs = int(m["n_runs"])
-        _, sub_dec = bytescodecs.BYTES_CODECS[m.get("sub", "plain")]
-        v_lens, v_data = sub_dec(val_payload, m["vals"], n_runs)
-        counts = bitpack.unpack(
-            len_payload, int(m["len_width"]), n_runs).astype(np.int64) + 1
-        values = _bytes_logical_cast(
-            bytescodecs.parts_to_arrow(v_lens, v_data), t)
-    else:
-        arr = decode_array(payload, meta, n)
-        vc = pc.value_counts(arr.drop_null() if arr.null_count else arr)
-        values = vc.field("values")
-        counts = np.asarray(vc.field("counts"), dtype=np.int64)
-    out_vals = [values] if len(values) else []
-    out_cnts = [pa.array(np.asarray(counts, dtype=np.int64))] if len(values) else []
-    if nulls:
-        out_vals.append(pa.array([None], type=t))
-        out_cnts.append(pa.array([nulls], type=pa.int64()))
-    if not out_vals:
-        return pa.table({"value": pa.array([], type=t),
-                         "cnt": pa.array([], type=pa.int64())})
-    return pa.table({"value": pa.concat_arrays([a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a for a in out_vals]),
-                     "cnt": pa.concat_arrays(out_cnts)})
-
+    """Partial ``(value, cnt)`` rows for one chunk: :func:`chunk_group_multi`
+    over one group column and no agg column. Null rows surface as a
+    null-value row (SQL GROUP BY groups nulls); ``mask`` (bool[n], from the
+    predicate machinery) restricts the counts to matching rows."""
+    return chunk_group_multi([(payload, meta)], n, mask=mask) \
+        .rename_columns(["value", "cnt"])
 
 def chunk_nonnull_count(payload: bytes | None, meta: dict, n: int,
                         mask: np.ndarray | None = None) -> int:
@@ -452,141 +347,15 @@ def chunk_group_sums(g_payload: bytes, g_meta: dict,
                      a_payload: bytes | None, a_meta: dict, n: int,
                      mask: np.ndarray | None = None,
                      count_only: bool = False) -> pa.Table:
-    """Partial ``(value, cnt, sum, nn, mn, mx)`` rows for one chunk —
-    grouped COUNT(*)/SUM/MIN/MAX pushed to the codec layer
-    (engine.group_agg_table reduces). ``nn`` is the group's non-null
-    agg-value count — summing it gives AVG's exact denominator (round 5:
-    grouped AVG routes as exact-sum / exact-non-null-count, one double
-    division at the end); ``mn``/``mx`` are the group's agg min/max in the
-    int64 domain (NULL for all-null groups, like sum).
-
-    Dict-coded group chunks aggregate ON THE PACKED CODE STREAM: the agg
-    column decodes (its values are needed regardless) but group values never
-    materialize beyond the small dictionary store — counts are a bincount of
-    the codes, sums an ``np.add.at`` scatter into a per-code accumulator.
-    Any other group codec decodes both columns and uses Arrow's hash
-    aggregation. SQL semantics: nulls form a group; a group whose agg values
-    are all null gets sum NULL; int64 overflow wraps exactly like Spark's
-    non-ANSI sum(long) (wrap-around addition is associative mod 2^64).
-
-    ``mask`` (bool[n], from the predicate machinery) restricts the
-    aggregation to matching rows — filtered grouped aggregates stay at the
-    codec layer: in the dict path the mask indexes the CODE stream, so
-    group values still never materialize per row.
-
-    ``count_only`` is the COUNT(col) pushdown (round 5): only ``nn`` (the
-    group's non-null count of the counted column) is real — sum/mn/mx come
-    back NULL — and the counted column's VALUES never decode. Its payload
-    is touched only for its validity section, and not at all for a chunk
-    whose meta shows zero nulls (``a_payload`` may then be None), so a
-    per-language count of a text column reads group codes + bitmaps, never
-    FSST text bytes. Works for ANY stored column type."""
-    a_valid: np.ndarray | None = None
-    if count_only:
-        if int(a_meta["nulls"]):
-            a_valid = unpack_validity(unpack_sections(a_payload)[0], n)
-            if mask is not None:
-                a_valid = a_valid[mask]
-        a_arr = None
-    else:
-        a_arr = decode_array(a_payload, a_meta, n)
-        if mask is not None:
-            a_arr = a_arr.filter(pa.array(mask))
-        if not pa.types.is_integer(a_arr.type):
-            # timestamps/dates aggregate in their epoch int64 domain
-            # (round 5: grouped MIN/MAX over time columns); the engine
-            # casts mn/mx back
-            a_arr = (a_arr.cast(pa.int64())
-                     if not pa.types.is_date(a_arr.type)
-                     else a_arr.cast(pa.int32()).cast(pa.int64()))
-    t = parse_type(g_meta["type"])
-    m = g_meta["m"]
-    nulls = int(g_meta["nulls"])
-    n_valid = n - nulls
-    if is_bytes_type(t) and g_meta["codec"] in ("dict", "dictfsst") and n_valid:
-        g_validity, body = unpack_sections(g_payload)
-        dict_payload, code_payload = unpack_sections(body)
-        _, sub_dec = bytescodecs.BYTES_CODECS[m.get("sub", "plain")]
-        ndv = int(m["ndv"])
-        d_lens, d_data = sub_dec(dict_payload, m["dict"], ndv)
-        codes = bitpack.unpack(code_payload, int(m["width"]),
-                               n_valid).astype(np.int64)
-        if nulls:  # null group takes code ndv
-            gmask = unpack_validity(g_validity, n)
-            full = np.full(n, ndv, dtype=np.int64)
-            full[gmask] = codes
-            codes = full
-        if mask is not None:
-            codes = codes[mask]
-        ngroups = ndv + (1 if nulls else 0)
-        cnt = np.bincount(codes, minlength=ngroups)
-        if count_only:
-            nn = np.asarray(
-                cnt if a_valid is None
-                else np.bincount(codes[a_valid], minlength=ngroups),
-                dtype=np.int64)
-            sums = mns = mxs = pa.nulls(ngroups, pa.int64())
-        else:
-            if a_arr.null_count:
-                avalid = np.asarray(a_arr.is_valid(), dtype=bool)
-                av = np.asarray(a_arr.fill_null(0), dtype=np.int64)[avalid]
-                acodes = codes[avalid]
-            else:
-                av = np.asarray(a_arr, dtype=np.int64)
-                acodes = codes
-            nn = np.bincount(acodes, minlength=ngroups)  # non-null agg/group
-            # int64 accumulation: wrap-around addition is associative mod
-            # 2^64, so on overflow this yields bit-for-bit what Spark's own
-            # (non-ANSI) sum(long) over the decoded rows would — the output
-            # column is long, so a wider exact value would be
-            # unrepresentable anyway
-            acc = np.zeros(ngroups, dtype=np.int64)
-            np.add.at(acc, acodes, av)
-            sums = pa.array(acc, type=pa.int64(), mask=nn == 0)
-            mn_a = np.full(ngroups, np.iinfo(np.int64).max, dtype=np.int64)
-            mx_a = np.full(ngroups, np.iinfo(np.int64).min, dtype=np.int64)
-            np.minimum.at(mn_a, acodes, av)
-            np.maximum.at(mx_a, acodes, av)
-            mns = pa.array(mn_a, type=pa.int64(), mask=nn == 0)
-            mxs = pa.array(mx_a, type=pa.int64(), mask=nn == 0)
-        values = _bytes_logical_cast(
-            bytescodecs.parts_to_arrow(d_lens, d_data), t)
-        if nulls:
-            values = pa.concat_arrays(
-                [values.combine_chunks() if isinstance(values, pa.ChunkedArray)
-                 else values, pa.array([None], type=t)])
-        keep = cnt > 0
-        out = pa.table({"value": values, "cnt": pa.array(cnt, type=pa.int64()),
-                        "sum": sums,
-                        "nn": pa.array(nn, type=pa.int64()),
-                        "mn": mns, "mx": mxs})
-        return out.filter(pa.array(keep)) if not keep.all() else out
-    g_arr = decode_array(g_payload, g_meta, n)
-    if mask is not None:
-        g_arr = g_arr.filter(pa.array(mask))
-    if count_only:
-        v = (np.ones(len(g_arr), dtype=np.int64) if a_valid is None
-             else a_valid.astype(np.int64))
-        r = (pa.table({"value": g_arr, "v": pa.array(v, type=pa.int64())})
-             .group_by("value")
-             .aggregate([([], "count_all"), ("v", "sum")]))
-        null64 = pa.nulls(r.num_rows, pa.int64())
-        return pa.table({"value": r.column("value"),
-                         "cnt": r.column("count_all").cast(pa.int64()),
-                         "sum": null64,
-                         "nn": r.column("v_sum").cast(pa.int64()),
-                         "mn": null64, "mx": null64})
-    r = (pa.table({"value": g_arr, "v": a_arr})
-         .group_by("value")
-         .aggregate([("v", "sum"), ([], "count_all"), ("v", "count"),
-                     ("v", "min"), ("v", "max")]))
-    return pa.table({"value": r.column("value"),
-                     "cnt": r.column("count_all").cast(pa.int64()),
-                     "sum": r.column("v_sum").cast(pa.int64()),
-                     "nn": r.column("v_count").cast(pa.int64()),
-                     "mn": r.column("v_min").cast(pa.int64()),
-                     "mx": r.column("v_max").cast(pa.int64())})
-
+    """Partial ``(value, cnt, sum, nn, mn, mx)`` rows for one chunk:
+    :func:`chunk_group_multi` over one group column and one agg column.
+    ``nn`` is the group's non-null agg count (AVG's exact denominator);
+    ``count_only`` is the COUNT(col) pushdown, where only ``nn`` is real
+    and ``a_payload`` may be None for a null-free chunk."""
+    return chunk_group_multi(
+        [(g_payload, g_meta)], n, mask=mask,
+        a_specs=[(a_payload, a_meta, count_only)]
+    ).rename_columns(["value", "cnt", "sum", "nn", "mn", "mx"])
 
 #: date_trunc units the derived-key kernel flooring supports (identical
 #: vocabularies in pyarrow's floor_temporal and Spark's date_trunc)
@@ -689,74 +458,73 @@ def _group_codes(payload: bytes, meta: dict, n: int,
     return codes, values
 
 
-def chunk_group_multi(g_chunks: list[tuple[bytes, dict]],
-                      a_chunk: tuple[bytes | None, dict] | None, n: int,
+def _int64_domain(arr: pa.Array) -> pa.Array:
+    """Agg values in the int64 domain: integers as they are, timestamps and
+    dates as epoch values (the unit chunk metas and commit stats store)."""
+    if pa.types.is_integer(arr.type):
+        return arr
+    if pa.types.is_date(arr.type):
+        return arr.cast(pa.int32()).cast(pa.int64())
+    return arr.cast(pa.int64())
+
+
+def chunk_group_multi(g_chunks: list[tuple], n: int,
                       mask: np.ndarray | None = None,
-                      count_only: bool = False,
-                      a_specs: list[tuple[bytes | None, dict, bool]]
-                      | None = None) -> pa.Table:
-    """Partial ``(g0..g{k-1}, cnt[, sum, nn, mn, mx])`` rows for one
-    chunk — composite
-    GROUP BY pushed to the codec layer (round-5 verdict, next #2:
-    ``GROUP BY lang, source`` must not force a full decode).
+                      a_specs: list[tuple[bytes | None, dict, bool]] = ()
+                      ) -> pa.Table:
+    """Partial ``(g0..g{k-1}, cnt, sum{j}, nn{j}, mn{j}, mx{j})`` rows for
+    one chunk — GROUP BY pushed to the codec layer; the engine's aggregate
+    kernel reduces them. With no group column (k = 0) this is the ungrouped
+    aggregate: one row, or none when ``mask`` matches no row.
 
     Per-column code streams combine into one int64 key
-    (``code0 * ng1*ng2*... + code1 * ng2*... + ...``); ``np.unique`` over
-    the combined keys gives the observed groups (memory O(observed
-    distinct), never O(prod ndv)) and the counts; sums scatter through the
-    inverse index. Group VALUES materialize only once per surviving group
-    via per-column dictionary takes. Dict-coded bytes columns never
-    materialize rows at all; other codecs pay one decode +
-    dictionary_encode. Same SQL semantics as :func:`chunk_group_sums`:
-    nulls form groups, all-null agg groups sum to NULL, int64 sums wrap
-    mod 2^64 (Spark non-ANSI parity). If the combined-key domain would
-    overflow int64 (astronomically wide composite groups), falls back to
-    Arrow's multi-key hash aggregation on decoded columns.
+    (``code0 * ng1*ng2*... + code1 * ng2*... + ...``). When that composite
+    domain has at most ``n`` codes, a dense bincount plus a remap gives the
+    observed groups, their counts and each row's group index; otherwise
+    ``np.unique`` does (memory O(observed distinct), never O(prod ndv)).
+    Group VALUES materialize only once per surviving group via per-column
+    dictionary takes: dict-coded bytes columns never materialize rows at
+    all; other codecs pay one decode + dictionary_encode. If the
+    combined-key domain would overflow int64 (astronomically wide
+    composite groups), falls back to Arrow's multi-key hash aggregation on
+    decoded columns.
 
-    ``count_only`` is the composite COUNT(col) pushdown (round 5): only
-    ``nn`` is real (sum/mn/mx NULL) and the counted column's values never
-    decode — validity section only, no payload at all when its meta shows
-    zero nulls (``a_chunk[0]`` may then be None). Any column type counts.
+    ``a_specs`` lists the agg columns as ``(payload, meta, count_only)``;
+    every one scatters through the same combined key and group index into
+    ``sum{j}/nn{j}/mn{j}/mx{j}`` (spec index j). ``nn`` is the group's
+    non-null count (AVG's exact denominator); ``mn``/``mx`` are in the
+    int64 domain (epoch values for time columns). SQL semantics: nulls form
+    groups; a group whose agg values are all null gets NULL sum/mn/mx;
+    int64 sums wrap mod 2^64 (wrap-around addition is associative, so this
+    is Spark's non-ANSI sum(long) bit for bit).
 
-    ``a_specs`` (round 5, multi-agg-column grouped pushdown) generalizes
-    ``a_chunk``/``count_only`` to a LIST of ``(payload, meta, count_only)``
-    agg columns aggregated in this same single pass over the group code
-    streams — the combined key, ``np.unique`` and inverse index are
-    computed ONCE and every agg column scatters through them. Output
-    columns are then ``sum{j}/nn{j}/mn{j}/mx{j}`` per spec index j
-    (mutually exclusive with ``a_chunk``).
+    A count-only spec is the COUNT(col) pushdown: only ``nn{j}`` is real
+    (sum/mn/mx NULL) and the column's values never decode — validity
+    section only, no payload at all when its meta shows zero nulls (the
+    payload may then be None). Any column type counts.
 
-    A ``g_chunks`` entry may be ``(payload, meta, transform)`` (round 5,
-    derived time keys): the transform projects the column through
-    :func:`apply_group_transform` before its codes are computed, so
-    ``GROUP BY to_date(ts)`` groups on per-day codes, never raw
-    timestamps."""
+    A ``g_chunks`` entry is ``(payload, meta)`` or ``(payload, meta,
+    transform)`` (derived time keys): the transform projects the column
+    through :func:`apply_group_transform` before its codes are computed,
+    so ``GROUP BY to_date(ts)`` groups on per-day codes, never raw
+    timestamps.
+
+    ``mask`` (bool[n], from the predicate machinery) restricts the
+    aggregation to matching rows; it indexes the code streams, so group
+    values still never materialize per row."""
     g_chunks = [(e[0], e[1], e[2] if len(e) > 2 else None)
                 for e in g_chunks]
-    legacy = a_specs is None
-    if legacy:
-        a_specs = ([] if a_chunk is None
-                   else [(a_chunk[0], a_chunk[1], count_only)])
     # pre-computed validity for count-only specs (payload is None for a
     # null-free chunk: validity stays None -> the group's nn == cnt)
     pre_valid: list[np.ndarray | None] = [
         (unpack_validity(unpack_sections(p)[0], n)
          if co and int(m["nulls"]) else None)
         for p, m, co in a_specs]
-
-    def _names(tbl: pa.Table) -> pa.Table:
-        # the legacy single-agg call keeps its historical column names
-        if legacy and a_specs:
-            return tbl.rename_columns(
-                [c[:-1] if c in ("sum0", "nn0", "mn0", "mx0") else c
-                 for c in tbl.schema.names])
-        return tbl
-
     cols = [_group_codes(p, m, n, transform=tr) for p, m, tr in g_chunks]
-    ngs = [len(v) for _, v in cols]
+    ngs = [max(1, len(v)) for _, v in cols]
     prod = 1
     for ng in ngs:
-        prod *= max(1, ng)
+        prod *= ng
     if prod >= (1 << 62):  # no composite code space: decode + hash-agg
         names = [f"g{i}" for i in range(len(g_chunks))]
         data = {f"g{i}": (decode_array(p, m, n) if tr is None
@@ -769,12 +537,7 @@ def chunk_group_multi(g_chunks: list[tuple[bytes, dict]],
                     (np.ones(n, dtype=bool) if pre_valid[j] is None
                      else pre_valid[j]).astype(np.int64))
             else:
-                v = decode_array(p, m, n)
-                if not pa.types.is_integer(v.type):
-                    v = (v.cast(pa.int64())
-                         if not pa.types.is_date(v.type)
-                         else v.cast(pa.int32()).cast(pa.int64()))
-                data[f"v{j}"] = v
+                data[f"v{j}"] = _int64_domain(decode_array(p, m, n))
         tbl = pa.table(data)
         if mask is not None:
             tbl = tbl.filter(pa.array(mask))
@@ -799,19 +562,33 @@ def chunk_group_multi(g_chunks: list[tuple[bytes, dict]],
                 out[f"nn{j}"] = r.column(f"v{j}_count").cast(pa.int64())
                 out[f"mn{j}"] = r.column(f"v{j}_min").cast(pa.int64())
                 out[f"mx{j}"] = r.column(f"v{j}_max").cast(pa.int64())
-        return _names(pa.table(out))
-    combined = np.zeros(n, dtype=np.int64)
+        return pa.table(out)
+    combined = np.zeros(n, dtype=np.int64) if not cols else None
     for (codes, _), ng in zip(cols, ngs):
-        combined *= max(1, ng)
-        combined += codes
+        combined = codes if combined is None else combined * ng + codes
     if mask is not None:
         combined = combined[mask]
-    if a_specs:
+    if prod <= n:
+        # dense domain: bincount + remap yields np.unique's (u, inv, cnt)
+        dense = np.bincount(combined, minlength=prod)
+        u = np.flatnonzero(dense)
+        cnt = dense[u]
+        if len(u) == prod:  # every code observed: codes are the index
+            inv = combined
+        elif a_specs:
+            remap = np.zeros(prod, dtype=np.int64)
+            remap[u] = np.arange(len(u))
+            inv = remap[combined]
+    else:
         u, inv, cnt = np.unique(combined, return_inverse=True,
                                 return_counts=True)
-    else:
-        u, cnt = np.unique(combined, return_counts=True)
-    extra: dict[str, pa.Array] = {}
+    out = {}
+    rem = u
+    for i in reversed(range(len(cols))):
+        out[f"g{i}"] = cols[i][1].take(pa.array(rem % ngs[i], type=pa.int64()))
+        rem = rem // ngs[i]
+    out = {f"g{i}": out[f"g{i}"] for i in range(len(cols))}
+    out["cnt"] = pa.array(cnt, type=pa.int64())
     for j, (p, m, co) in enumerate(a_specs):
         if co:
             av_valid = pre_valid[j]
@@ -822,19 +599,15 @@ def chunk_group_multi(g_chunks: list[tuple[bytes, dict]],
                 else np.bincount(inv[av_valid], minlength=len(u)),
                 dtype=np.int64)
             null64 = pa.nulls(len(u), pa.int64())
-            extra[f"sum{j}"] = null64
-            extra[f"nn{j}"] = pa.array(nn, type=pa.int64())
-            extra[f"mn{j}"] = null64
-            extra[f"mx{j}"] = null64
+            out[f"sum{j}"] = null64
+            out[f"nn{j}"] = pa.array(nn, type=pa.int64())
+            out[f"mn{j}"] = null64
+            out[f"mx{j}"] = null64
             continue
         a_arr = decode_array(p, m, n)
         if mask is not None:
             a_arr = a_arr.filter(pa.array(mask))
-        if not pa.types.is_integer(a_arr.type):
-            # epoch int64 domain for time columns (see chunk_group_sums)
-            a_arr = (a_arr.cast(pa.int64())
-                     if not pa.types.is_date(a_arr.type)
-                     else a_arr.cast(pa.int32()).cast(pa.int64()))
+        a_arr = _int64_domain(a_arr)
         if a_arr.null_count:
             avalid = np.asarray(a_arr.is_valid(), dtype=bool)
             av = np.asarray(a_arr.fill_null(0), dtype=np.int64)[avalid]
@@ -850,22 +623,11 @@ def chunk_group_multi(g_chunks: list[tuple[bytes, dict]],
         mx_a = np.full(len(u), np.iinfo(np.int64).min, dtype=np.int64)
         np.minimum.at(mn_a, ainv, av)
         np.maximum.at(mx_a, ainv, av)
-        extra[f"sum{j}"] = pa.array(acc, type=pa.int64(), mask=nn == 0)
-        extra[f"nn{j}"] = pa.array(nn, type=pa.int64())
-        extra[f"mn{j}"] = pa.array(mn_a, type=pa.int64(), mask=nn == 0)
-        extra[f"mx{j}"] = pa.array(mx_a, type=pa.int64(), mask=nn == 0)
-    out = {}
-    rem = u
-    for i in reversed(range(len(cols))):
-        ng = max(1, ngs[i])
-        idx = rem % ng
-        rem = rem // ng
-        out[f"g{i}"] = cols[i][1].take(pa.array(idx, type=pa.int64()))
-    out = {f"g{i}": out[f"g{i}"] for i in range(len(cols))}
-    out["cnt"] = pa.array(cnt, type=pa.int64())
-    out.update(extra)
-    return _names(pa.table(out))
-
+        out[f"sum{j}"] = pa.array(acc, type=pa.int64(), mask=nn == 0)
+        out[f"nn{j}"] = pa.array(nn, type=pa.int64())
+        out[f"mn{j}"] = pa.array(mn_a, type=pa.int64(), mask=nn == 0)
+        out[f"mx{j}"] = pa.array(mx_a, type=pa.int64(), mask=nn == 0)
+    return pa.table(out)
 
 def _spread_nulls(valid_arr: pa.Array, mask: np.ndarray) -> pa.Array:
     """Re-insert nulls: take() with a null-masked index array propagates nulls."""

@@ -1458,127 +1458,6 @@ def _classify_records(nonempty: list[dict], preds: dict
     return full, partial, pruned
 
 
-_COUNT_SCHEMA = T.StructType([T.StructField("cnt", T.LongType(), False)])
-
-
-def _make_count_kernel(out_dir: str, predicates: dict):
-    """COUNT(*) with predicate pushdown, never materializing matched rows:
-    metas-only zone pruning, then per chunk either (a) skip, (b) the
-    all-match proof takes n_rows with no payload read, or (c) decode ONLY
-    the predicate columns and sum the mask. Non-predicate columns are
-    never read at all."""
-    pred_cols = list(predicates)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
-        manifest = Manifest(out_dir)
-        for batch in batches:
-            for bucket in batch.column("bucket").to_pylist():
-                total = 0
-                col_meta: dict[str, dict[int, tuple[dict, int]]] = {}
-                keep_seqs: set[int] | None = None
-                for c in pred_cols:
-                    t = pq.read_table(manifest.chunk_read_path(c, bucket),
-                                      columns=["chunk_seq", "meta", "n_rows"])
-                    rows = {
-                        int(s): (json.loads(m), int(nr))
-                        for s, m, nr in zip(
-                            t.column("chunk_seq").to_pylist(),
-                            t.column("meta").to_pylist(),
-                            t.column("n_rows").to_pylist(),
-                        )
-                    }
-                    ok = {s for s, (m, nr) in rows.items()
-                          if _chunk_survives(m, predicates[c], nr)}
-                    keep_seqs = ok if keep_seqs is None else keep_seqs & ok
-                    col_meta[c] = rows
-                need = []
-                for s in sorted(keep_seqs or ()):
-                    if all(_zone_all_match(col_meta[c][s][0], predicates[c],
-                                           col_meta[c][s][1])
-                           for c in pred_cols):
-                        total += col_meta[pred_cols[0]][s][1]
-                    else:
-                        need.append(s)
-                payloads = {
-                    c: _read_chunk_payloads(manifest, c, bucket, need)
-                    for c in pred_cols
-                } if need else {}
-                for s in need:
-                    skip = False
-                    for c in pred_cols:
-                        spec = predicates[c]
-                        if spec[0] in ("in", "prefix",
-                                       "contains", "suffix"):
-                            m, _ = col_meta[c][s]
-                            may = chunklib.dict_may_contain(
-                                payloads[c][s], m, spec[1],
-                                mode=spec[0])
-                            if may is False:
-                                skip = True
-                                break
-                    if skip:
-                        continue
-                    arrs = {
-                        c: chunklib.decode_array(
-                            payloads[c][s], *col_meta[c][s])
-                        for c in pred_cols
-                    }
-                    mask = _chunk_mask(arrs, predicates)
-                    total += int(pc.sum(
-                        mask.cast(pa.int32()).fill_null(0)).as_py() or 0)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([total], pa.int64())], names=["cnt"])
-
-    return kernel
-
-
-def count_table(spark: SparkSession, out_dir: str,
-                predicates: dict | None = None) -> DataFrame:
-    """``SELECT COUNT(*) [WHERE ...]`` pushed into the chunk store; returns
-    a one-row DataFrame ``(cnt long)``.
-
-    Three cost tiers, best first:
-
-    - no predicates: pure metadata — the commit logs are scanned by
-      executors (same distributed path as metrics_table) and n_rows summed;
-      no chunk file is ever opened.
-    - predicates, proven buckets: buckets whose commit zone maps prove
-      all-match (``count_plan``) contribute n_rows driver-side with zero
-      task I/O; proven-no-match buckets are dropped.
-    - boundary buckets: a count kernel decodes ONLY predicate columns for
-      chunks the all-match/no-match proofs cannot decide (see
-      ``_make_count_kernel``).
-
-    Reference analog: the reference answers count-style health queries from
-    its metrics channel without rereading parquet (main.go metrics loop);
-    here the same holds with predicates, against the commit records.
-    """
-    if not predicates:
-        meta, _ = _plan_store(out_dir)
-        recs = _lineage_records_df(spark, Manifest(out_dir),
-                                   meta["plan_hash"])
-        if recs is None:
-            return spark.createDataFrame([(0,)], _COUNT_SCHEMA)
-        return recs.select(
-            F.get_json_object("record", "$.n_rows").cast("long").alias("n")
-        ).agg(F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("cnt"))
-    plan = count_plan(out_dir, predicates)
-    preds, full_rows = plan["predicates"], plan["full_rows"]
-    if not plan["partial"]:
-        return spark.createDataFrame([(full_rows,)], _COUNT_SCHEMA)
-    buckets_df = spark.createDataFrame(
-        [(b,) for b in plan["partial"]],
-        T.StructType([T.StructField("bucket", T.LongType(), False)])
-    ).repartition(max(1, len(plan["partial"])))
-    part = buckets_df.mapInArrow(_make_count_kernel(out_dir, preds),
-                                 _COUNT_SCHEMA)
-    return part.agg(
-        (F.coalesce(F.sum("cnt"), F.lit(0)) + F.lit(full_rows))
-        .cast("long").alias("cnt"))
-
-
 def _topk_cutoff(stats: list[tuple[int, int, int]], k: int,
                  descending: bool) -> int | None:
     """Zone-map top-k cutoff over (min, max, n_nonnull) stats.
@@ -1882,6 +1761,12 @@ _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
 # store); exact for MIN/MAX, which are order-only. SUM/AVG stay
 # integral-only (SQL has no sum(timestamp)).
 _TIME_TYPES = {"timestamp", "timestamp_ntz", "date"}
+# Spark field of each derived group-key kind (date_trunc always returns a
+# timestamp)
+_DERIVED_FIELD = {"date": T.DateType(), "trunc": T.TimestampType(),
+                  "part": T.IntegerType()}
+# agg_table spec head -> the partial column that carries it
+_PARTIAL_OF = {"nncount": "nn", "sum": "sum", "min": "mn", "max": "mx"}
 
 
 def _validate_aggs(aggs: dict, by_name: dict[str, str]) -> None:
@@ -1929,6 +1814,26 @@ def _validate_aggs(aggs: dict, by_name: dict[str, str]) -> None:
             f"form; decode_table + DataFrame agg handles those)")
 
 
+def _agg_specs(aggs: dict) -> list[tuple[str, bool]]:
+    """The kernel's ``[(column, count_only)]`` for an ``{alias: spec}`` map,
+    in first-use order: one entry per column a sum/avg/min/max/nncount spec
+    touches, count-only when nncount alone touches it (its values then
+    never decode). Other spec heads (count(*), and the SQL router's own)
+    need no agg column."""
+    cols: dict[str, bool] = {}
+    for spec in aggs.values():
+        if spec[0] in ("sum", "avg", "min", "max", "nncount"):
+            cols[spec[1]] = cols.get(spec[1], True) and spec[0] == "nncount"
+    return list(cols.items())
+
+
+def _partial_names(n_specs: int) -> list[str]:
+    """The partial columns after the group keys: ``cnt`` plus one
+    ``sum{j}/nn{j}/mn{j}/mx{j}`` quad per agg spec."""
+    return ["cnt"] + [f"{k}{j}" for j in range(n_specs)
+                      for k in ("sum", "nn", "mn", "mx")]
+
+
 def _wrap_i64(v: int | None) -> int | None:
     """Exact unbounded-int accumulator -> signed int64 with wrap-around
     (mod 2^64), matching Spark's non-ANSI sum(long) over the same rows —
@@ -1940,166 +1845,302 @@ def _wrap_i64(v: int | None) -> int | None:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def _combine_agg(acc: dict, alias: str, fn: str, st: dict, n_rows: int
-                 ) -> None:
-    """Fold one proven-all-match zone's stats (bucket commit cols or chunk
-    meta — same key names) into the accumulator. A zone whose agg column is
-    all-null has no min/sum keys and contributes nothing (SQL agg-ignore-
-    null semantics); count counts rows regardless."""
-    if fn == "count":
-        acc[alias] = (acc[alias] or 0) + n_rows
-        return
-    if fn == "nncount":  # non-null rows of the column (avg's denominator)
-        acc[alias] = (acc[alias] or 0) + n_rows - int(st.get("nulls", 0))
-        return
-    if "min" not in st:
-        return
-    v = st["sum"] if fn == "sum" else st[fn]
-    if acc[alias] is None:
-        acc[alias] = v
-    elif fn == "sum":
-        acc[alias] += v
-    else:
-        acc[alias] = min(acc[alias], v) if fn == "min" else max(acc[alias], v)
+def _zone_partials(zones: list[tuple[dict, int]],
+                   specs: list[tuple[str, bool]]) -> list:
+    """One ungrouped partial row ``(cnt, sum{j}, nn{j}, mn{j}, mx{j})``
+    folded from zones proven all-match: ``(stats by column, n_rows)`` pairs,
+    where the stats are bucket commit columns or chunk metas (same key
+    names). Exact sums, min and max come off the stats (format v7); a
+    column that is all null in a zone has no min/sum keys and adds only to
+    the row count (SQL agg-ignore-null semantics)."""
+    row = [sum(nr for _, nr in zones)]
+    for col, co in specs:
+        sts = [(cols.get(col, {}), nr) for cols, nr in zones]
+        vals = [st for st, _ in sts if not co and "min" in st]
+        row += [_wrap_i64(sum(st["sum"] for st in vals)) if vals else None,
+                sum(nr - int(st.get("nulls", 0)) for st, nr in sts),
+                min((st["min"] for st in vals), default=None),
+                max((st["max"] for st in vals), default=None)]
+    return row
 
 
-def _make_agg_kernel(out_dir: str, predicates: dict, aggs: dict,
-                     out_names: list[str]):
-    """Per-bucket partial aggregates with the same three cost tiers as the
-    count kernel: chunk-level zone pruning on predicate columns, a per-chunk
-    all-match proof that reads agg values off chunk METAS (exact sums /
-    min / max, format v7) with zero payload decode, and an exact path that
-    decodes only predicate + agg columns and aggregates the masked rows."""
-    pred_cols = list(predicates)
-    agg_cols = sorted({spec[1] for spec in aggs.values() if spec[0] != "count"})
-    # columns referenced ONLY by nncount specs (and by no predicate) never
-    # decode (round 5, COUNT(col)): chunk metas prove null-free chunks and
-    # validity bitmaps settle the rest (chunk.chunk_nonnull_count), so
-    # COUNT(text) touches no FSST bytes even at boundary chunks
-    value_cols = {spec[1] for spec in aggs.values()
-                  if spec[0] not in ("count", "nncount")}
-    count_only_cols = ({spec[1] for spec in aggs.values()
-                        if spec[0] == "nncount"}
-                       - value_cols - set(pred_cols))
-    need_cols = list(dict.fromkeys(pred_cols + agg_cols))
-    decode_cols = [c for c in need_cols if c not in count_only_cols]
+def _chunk_metas(manifest: Manifest, c: str, bucket: int
+                 ) -> dict[int, tuple[dict, int]]:
+    """``{chunk_seq: (meta, n_rows)}`` of one column's chunk file; the
+    payload column is never read."""
+    t = pq.read_table(manifest.chunk_read_path(c, bucket),
+                      columns=["chunk_seq", "meta", "n_rows"])
+    return {int(s): (json.loads(m), int(nr))
+            for s, m, nr in zip(t.column("chunk_seq").to_pylist(),
+                                t.column("meta").to_pylist(),
+                                t.column("n_rows").to_pylist())}
+
+
+def _bucket_chunk_masks(manifest: Manifest, bucket: int, predicates: dict,
+                        col_meta: dict | None = None) -> dict:
+    """Per-chunk predicate masks for one bucket, ``{chunk_seq: mask}``, from
+    the chunk metas of the predicate columns (``col_meta``, read here when
+    the caller has none; see :func:`_chunk_metas`): chunk zone maps prune
+    no-match chunks, the all-match proof maps a chunk to ``None``
+    (aggregate unmasked), a dict-coded chunk whose dictionary holds no
+    IN/prefix/substring probe is dropped after decoding only that
+    dictionary (chunk.dict_may_contain), and only the chunks still
+    undecided decode their predicate columns for an exact bool[n] mask.
+    Chunks with a zero-match mask are omitted."""
+    if col_meta is None:
+        col_meta = {c: _chunk_metas(manifest, c, bucket) for c in predicates}
+    keep: set[int] | None = None
+    for c, spec in predicates.items():
+        ok = {s for s, (m, nr) in col_meta[c].items()
+              if _chunk_survives(m, spec, nr)}
+        keep = ok if keep is None else keep & ok
+    masks: dict[int, "np.ndarray | None"] = {}
+    undecided = []
+    for s in sorted(keep or ()):
+        if all(_zone_all_match(col_meta[c][s][0], spec, col_meta[c][s][1])
+               for c, spec in predicates.items()):
+            masks[s] = None  # proven all-match, unmasked
+        else:
+            undecided.append(s)
+    payloads = {
+        c: _read_chunk_payloads(manifest, c, bucket, undecided)
+        for c in predicates
+    } if undecided else {}
+    for s in undecided:
+        if any(spec[0] in ("in", "prefix", "contains", "suffix")
+               and chunklib.dict_may_contain(
+                   payloads[c][s], col_meta[c][s][0], spec[1],
+                   mode=spec[0]) is False
+               for c, spec in predicates.items()):
+            continue
+        arrs = {c: chunklib.decode_array(payloads[c][s], *col_meta[c][s])
+                for c in predicates}
+        mask = np.asarray(_chunk_mask(arrs, predicates).fill_null(False),
+                          dtype=bool)
+        if mask.any():
+            masks[s] = mask
+    return masks
+
+
+def _make_group_multi_kernel(out_dir: str,
+                             group_specs: list[tuple[str, object, str]],
+                             agg_specs: list[tuple[str, bool]],
+                             predicates: dict | None = None):
+    """The aggregate kernel: per-bucket partial ``(g0..gk, cnt, sum{j},
+    nn{j}, mn{j}, mx{j})`` rows, the map-side combine of GROUP BY g0, g1,
+    ... — or, with no group column, of an ungrouped aggregate. Input
+    batches carry ``(bucket, all_match)`` rows.
+
+    Cost tiers per bucket, best first:
+
+    - a bucket flagged all-match (its commit zone maps proved every row)
+      or queried without predicates aggregates unmasked;
+    - otherwise :func:`_bucket_chunk_masks` prunes chunks off chunk metas
+      and dictionaries, proves all-match chunks, and decodes only the
+      predicate columns of the chunks it cannot decide;
+    - ungrouped, a chunk that aggregates unmasked is answered from its
+      chunk metas (exact sum/min/max and null counts), with no payload
+      read.
+
+    Every other chunk runs chunk.chunk_group_multi: chunk boundaries align
+    across columns, so zipping the chunk files by chunk_seq is exact, and
+    all agg columns scatter through one combined group key. ``agg_specs``
+    is ``[(col, count_only)]``; a count-only column reads its payload only
+    for chunks whose meta shows nulls (validity section) and never decodes
+    values.
+
+    ``group_specs`` is [(src_col, transform|None, out_name)] per group
+    dimension (round 5): a transform derives the key
+    (chunk.apply_group_transform — to_date/date_trunc/year...) inside the
+    kernel, before code computation; a source column shared by several
+    derived keys is read once."""
+    predicates = predicates or {}
+    srcs = list(dict.fromkeys(src for src, _, _ in group_specs))
+    agg_cols = [c for c, _ in agg_specs]
+    # columns whose payload every aggregated chunk needs
+    full_cols = list(dict.fromkeys(
+        srcs + [c for c, co in agg_specs if not co]))
+    names = [out for _, _, out in group_specs] + _partial_names(len(agg_specs))
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
         manifest = Manifest(out_dir)
+        # metas of every column read; a bare count(*) reads the first
+        # column's for the chunk row counts
+        meta_cols = (list(dict.fromkeys([*predicates, *srcs, *agg_cols]))
+                     or manifest.read_table_meta()["columns"][:1])
         for batch in batches:
-            for bucket in batch.column("bucket").to_pylist():
-                acc: dict[str, int | None] = {a: None for a in aggs}
-                col_meta: dict[str, dict[int, tuple[dict, int]]] = {}
-                keep_seqs: set[int] | None = None
-                for c in need_cols:
-                    t = pq.read_table(manifest.chunk_read_path(c, bucket),
-                                      columns=["chunk_seq", "meta", "n_rows"])
-                    rows = {
-                        int(s): (json.loads(m), int(nr))
-                        for s, m, nr in zip(
-                            t.column("chunk_seq").to_pylist(),
-                            t.column("meta").to_pylist(),
-                            t.column("n_rows").to_pylist(),
-                        )
-                    }
-                    if c in predicates:
-                        ok = {s for s, (m, nr) in rows.items()
-                              if _chunk_survives(m, predicates[c], nr)}
-                        keep_seqs = ok if keep_seqs is None else keep_seqs & ok
-                    col_meta[c] = rows
-                if keep_seqs is None:  # no predicates: every chunk counts
-                    keep_seqs = set(col_meta[need_cols[0]])
-                need = []
-                for s in sorted(keep_seqs):
-                    if all(_zone_all_match(col_meta[c][s][0], predicates[c],
-                                           col_meta[c][s][1])
-                           for c in pred_cols):
-                        nr = col_meta[need_cols[0]][s][1]
-                        for alias, spec in aggs.items():
-                            st = (col_meta[spec[1]][s][0]
-                                  if spec[0] != "count" else {})
-                            _combine_agg(acc, alias, spec[0], st, nr)
-                    else:
-                        need.append(s)
-                payloads: dict[str, dict[int, bytes]] = {}
-                if need:
-                    for c in need_cols:
-                        # count-only columns read payload bytes ONLY for
-                        # chunks whose meta shows nulls (validity needed)
-                        seqs = (need if c not in count_only_cols else
-                                [s for s in need
-                                 if int(col_meta[c][s][0].get("nulls", 0))])
-                        payloads[c] = (_read_chunk_payloads(
-                            manifest, c, bucket, seqs) if seqs else {})
-                for s in need:
-                    skip = False
-                    for c in pred_cols:
-                        spec = predicates[c]
-                        if spec[0] in ("in", "prefix",
-                                       "contains", "suffix"):
-                            m, _ = col_meta[c][s]
-                            may = chunklib.dict_may_contain(
-                                payloads[c][s], m, spec[1],
-                                mode=spec[0])
-                            if may is False:
-                                skip = True
-                                break
-                    if skip:
-                        continue
-                    arrs = {
-                        c: chunklib.decode_array(
-                            payloads[c][s], *col_meta[c][s])
-                        for c in decode_cols
-                    }
-                    mask = _chunk_mask(arrs, predicates)
-                    if mask is not None:
-                        matched = int(pc.sum(
-                            mask.cast(pa.int32()).fill_null(0)).as_py() or 0)
-                        bmask = np.asarray(mask.fill_null(False), dtype=bool)
-                    else:
-                        matched = col_meta[need_cols[0]][s][1]
-                        bmask = None
-                    if not matched:
-                        continue
-                    for alias, spec in aggs.items():
-                        if spec[0] == "count":
-                            acc[alias] = (acc[alias] or 0) + matched
-                            continue
-                        if spec[0] == "nncount" \
-                                and spec[1] in count_only_cols:
-                            m2, nr2 = col_meta[spec[1]][s]
-                            acc[alias] = (acc[alias] or 0) + \
-                                chunklib.chunk_nonnull_count(
-                                    payloads[spec[1]].get(s), m2, nr2,
-                                    mask=bmask)
-                            continue
-                        a = arrs[spec[1]]
-                        if mask is not None:
-                            a = a.filter(mask.fill_null(False))
-                        if spec[0] == "nncount":
-                            acc[alias] = ((acc[alias] or 0)
-                                          + len(a) - a.null_count)
-                            continue
-                        if pa.types.is_timestamp(a.type):
-                            a = a.cast(pa.int64())  # epoch micros
-                        elif pa.types.is_date(a.type):
-                            a = a.cast(pa.int32()).cast(pa.int64())
-                        if spec[0] == "sum":
-                            v = pc.sum(a).as_py()
-                        else:
-                            mm = pc.min_max(a)
-                            v = mm["min" if spec[0] == "min" else "max"].as_py()
-                        if v is not None:
-                            _combine_agg(acc, alias, spec[0],
-                                         {"min": v, "max": v, "sum": v}, 0)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([_wrap_i64(acc[a])], pa.int64())
-                     for a in out_names],
-                    names=out_names)
+            for bucket, bucket_all in zip(
+                    batch.column("bucket").to_pylist(),
+                    batch.column("all_match").to_pylist()):
+                metas = {c: _chunk_metas(manifest, c, bucket)
+                         for c in meta_cols}
+                n_rows = {s: nr for s, (_, nr) in metas[meta_cols[0]].items()}
+                if bucket_all or not predicates:
+                    chunks = dict.fromkeys(n_rows)
+                else:
+                    chunks = _bucket_chunk_masks(manifest, bucket,
+                                                 predicates, metas)
+                proven = [] if group_specs else [
+                    s for s, mk in chunks.items() if mk is None]
+                work = sorted(set(chunks) - set(proven))
+                pays = {c: _read_chunk_payloads(manifest, c, bucket, work)
+                        for c in full_cols} if work else {}
+                for c, co in agg_specs:
+                    if co and c not in pays:
+                        nseqs = [s for s in work
+                                 if int(metas[c][s][0].get("nulls", 0))]
+                        pays[c] = (_read_chunk_payloads(
+                            manifest, c, bucket, nseqs) if nseqs else {})
+                parts = [chunklib.chunk_group_multi(
+                    [(pays[src][s], metas[src][s][0], tr)
+                     for src, tr, _ in group_specs],
+                    n_rows[s], mask=chunks[s],
+                    a_specs=[(pays[c].get(s), metas[c][s][0], co)
+                             for c, co in agg_specs]
+                ).rename_columns(names) for s in work]
+                if proven:
+                    row = _zone_partials(
+                        [({c: metas[c][s][0] for c in agg_cols}, n_rows[s])
+                         for s in proven], agg_specs)
+                    parts.append(pa.table(
+                        [pa.array([v], pa.int64()) for v in row],
+                        names=names))
+                if parts:
+                    yield from pa.concat_tables(parts).to_batches()
 
     return kernel
+
+
+def _aggregate(spark: SparkSession, out_dir: str,
+               groups: list[tuple[str, tuple | None, str]],
+               specs: list[tuple[str, bool]],
+               predicates: dict | None, merge: bool = True) -> DataFrame:
+    """The driver behind every aggregate table: validate, plan, normalize
+    and classify the predicates, run the aggregate kernel over a
+    ``(bucket, all_match)`` frame, and merge the partials ``(g…, cnt,
+    sum{j}, nn{j}, mn{j}, mx{j})`` — grouped with one groupBy (``merge=False``
+    returns the per-bucket partials instead), ungrouped into one row.
+
+    ``groups`` is [(src, transform|None, out_name)] and may be empty;
+    ``specs`` is [(agg col, count_only)]. Ungrouped, buckets proven
+    all-match never reach a task: their commit records fold into one
+    driver-side partial row, and only boundary buckets run the kernel
+    (no kernel task at all when every bucket is proven)."""
+    out_group_names = [out for _, _, out in groups]
+    plain_srcs = {src for src, tr, _ in groups if tr is None}
+    spec_cols = [c for c, _ in specs]
+    part_names = _partial_names(len(specs))
+    if len(set(out_group_names)) != len(out_group_names):
+        raise ValueError("duplicate group columns")
+    if len(set(spec_cols)) != len(spec_cols):
+        raise ValueError("duplicate agg columns")
+    reserved = {"sum", "nn", "mn", "mx", *part_names}
+    for col in out_group_names:
+        if col in reserved:
+            raise ValueError(
+                f"column name {col!r} collides with an output alias")
+    # an agg column may equal a DERIVED key's source (min(ts) grouped by
+    # to_date(ts) is the natural first/last-per-day audit); only a plain
+    # group dimension conflicts
+    if any(c in plain_srcs or c in out_group_names for c in spec_cols):
+        raise ValueError("group and agg columns must differ")
+    meta, nonempty = _plan_store(out_dir)
+    for col in [src for src, _, _ in groups] + spec_cols:
+        if col not in meta["columns"]:
+            raise ValueError(
+                f"unknown column {col!r}; store has {meta['columns']}")
+    by_field = {f.name: f for f in
+                T.StructType.fromJson(meta["spark_schema"]).fields}
+    by_name = {c: f.dataType.simpleString() for c, f in by_field.items()}
+    for src, transform, _ in groups:
+        if transform is not None and by_name[src] not in _TIME_TYPES:
+            raise ValueError(
+                f"derived group key needs a time source column; "
+                f"{src!r} is {by_name[src]}")
+    for acol, co in specs:
+        if not co and by_name[acol] not in _INTEGRAL_TYPES \
+                and not _is_predicate_type(by_name[acol]):
+            raise ValueError(
+                f"grouped-agg pushdown needs an integral or time agg "
+                f"column; {acol!r} is {by_name[acol]} (float sums are "
+                f"order-dependent; decode_table + DataFrame agg handles "
+                f"those). COUNT(col) over any type: pass count_only=True")
+    # time columns aggregate in their epoch int64 domain: mn/mx are epoch
+    # values (micros for timestamps, days for dates) the caller casts back
+    fields = [T.StructField(
+        out, by_field[src].dataType if transform is None
+        else _DERIVED_FIELD[transform[0]], True)
+        for src, transform, out in groups]
+    fields += [T.StructField(nm, T.LongType(),
+                             not nm.startswith(("cnt", "nn")))
+               for nm in part_names]
+    out_schema = T.StructType(fields)
+    preds = _normalize_predicates(predicates or {}, by_name)
+    full, partial, _ = _classify_records(nonempty, preds)
+    # grouped, proven buckets skip all predicate work in the kernel (flag
+    # column); ungrouped, their commit records fold into one driver row.
+    # Boundary buckets decode predicate columns and mask the code streams
+    rows = [(int(r["bucket"]), True) for r in full] if groups else []
+    rows += [(int(r["bucket"]), False) for r in partial]
+    if groups and not rows:
+        return spark.createDataFrame([], out_schema)
+    # ungrouped, the driver row joins the kernel's partials only when
+    # proven buckets exist (a union costs a Spark stage); with no bucket
+    # at all it alone is the answer
+    partials = None if groups or (rows and not full) \
+        else spark.createDataFrame([tuple(_zone_partials(
+            [(r["columns"], int(r["n_rows"])) for r in full], specs))],
+            out_schema)
+    if rows:
+        buckets_df = spark.createDataFrame(
+            sorted(rows),
+            T.StructType([T.StructField("bucket", T.LongType(), False),
+                          T.StructField("all_match", T.BooleanType(), False)])
+        ).repartition(len(rows))
+        kernel_df = buckets_df.mapInArrow(
+            _make_group_multi_kernel(out_dir, groups, specs, preds),
+            out_schema)
+        partials = (kernel_df if partials is None
+                    else kernel_df.unionByName(partials))
+    if not merge:
+        # pre-merge per-bucket partials: the caller performs the single
+        # groupBy itself — e.g. the SQL router re-keys on a derived
+        # expression FIRST so map-side combine collapses on the final
+        # (low-cardinality) key instead of shuffling raw groups
+        return partials
+    aggs = []
+    for nm in part_names:
+        fn = {"mn": F.min, "mx": F.max}.get(nm[:2], F.sum)
+        e = fn(nm)
+        if not groups and (nm == "cnt" or nm.startswith("nn")):
+            e = F.coalesce(e, F.lit(0))  # SQL count over no row is 0
+        aggs.append(e.cast("long").alias(nm))
+    if groups:
+        return partials.groupBy(*out_group_names).agg(*aggs)
+    return partials.agg(*aggs)
+
+
+def count_table(spark: SparkSession, out_dir: str,
+                predicates: dict | None = None) -> DataFrame:
+    """``SELECT COUNT(*) [WHERE ...]`` pushed into the chunk store; returns
+    a one-row DataFrame ``(cnt long)``.
+
+    Three cost tiers, best first:
+
+    - proven buckets: every bucket without predicates, and with them the
+      buckets whose commit zone maps prove all-match (``count_plan``),
+      contribute n_rows driver-side from their commit records with zero
+      task I/O; proven-no-match buckets are dropped.
+    - proven chunks: in the boundary buckets, chunks proven all-match off
+      their metas contribute n_rows with no payload read.
+    - the remaining chunks decode ONLY their predicate columns (see
+      ``_make_group_multi_kernel``).
+
+    Reference analog: the reference answers count-style health queries from
+    its metrics channel without rereading parquet (main.go metrics loop);
+    here the same holds with predicates, against the commit records.
+    """
+    return _aggregate(spark, out_dir, [], [], predicates)
 
 
 def agg_table(spark: SparkSession, out_dir: str, aggs: dict,
@@ -2126,106 +2167,27 @@ def agg_table(spark: SparkSession, out_dir: str, aggs: dict,
     predicate + aggregate columns for the rest. On a ts-clustered store a
     time-window ``sum(x)`` therefore reads chunk bytes at the two boundary
     buckets only — the 10^12-row shape.
-
     """
-    meta, nonempty = _plan_store(out_dir)
-    spark_schema = T.StructType.fromJson(meta["spark_schema"])
-    by_name = {f.name: f.dataType.simpleString() for f in spark_schema.fields}
-    _validate_aggs(aggs, by_name)
-    # avg = exact sum / non-null count, both long accumulators; the division
-    # happens once at the end, so the double result is bit-identical to any
-    # engine dividing the same two exact integers
-    plan_aggs: dict[str, tuple] = {}
-    for alias, spec in aggs.items():
-        if spec[0] == "avg":
-            plan_aggs[f"__{alias}_sum"] = ("sum", spec[1])
-            plan_aggs[f"__{alias}_nn"] = ("nncount", spec[1])
-        else:
-            plan_aggs[alias] = spec
-    preds = _normalize_predicates(predicates or {}, by_name)
-    full, partial, _ = _classify_records(nonempty, preds)
-    out_names = list(plan_aggs)
-    acc: dict[str, int | None] = {a: None for a in plan_aggs}
-    for rec in full:
-        for alias, spec in plan_aggs.items():
-            st = rec["columns"].get(spec[1], {}) if spec[0] != "count" else {}
-            _combine_agg(acc, alias, spec[0], st, int(rec["n_rows"]))
-    part_schema = T.StructType([
-        T.StructField(a, T.LongType(), True) for a in out_names])
-    driver_row = spark.createDataFrame(
-        [tuple(_wrap_i64(acc[a]) for a in out_names)], part_schema)
-    if not partial:
-        parts = driver_row
-    else:
-        buckets_df = spark.createDataFrame(
-            [(int(r["bucket"]),) for r in partial],
-            T.StructType([T.StructField("bucket", T.LongType(), False)])
-        ).repartition(max(1, len(partial)))
-        parts = buckets_df.mapInArrow(
-            _make_agg_kernel(out_dir, preds, plan_aggs, out_names),
-            part_schema
-        ).unionByName(driver_row)
+    meta = Manifest(out_dir).read_table_meta()
+    _validate_aggs(aggs, {f.name: f.dataType.simpleString() for f in
+                          T.StructType.fromJson(meta["spark_schema"]).fields})
+    specs = _agg_specs(aggs)
+    j = {c: i for i, (c, _) in enumerate(specs)}
+    df = _aggregate(spark, out_dir, [], specs, predicates)
     exprs = []
     for alias, spec in aggs.items():
-        if spec[0] in ("count", "nncount"):
-            # SQL count semantics: 0 (not NULL) over empty / all-null input
-            e = F.coalesce(F.sum(alias), F.lit(0)).cast("long")
-        elif spec[0] == "sum":
-            e = F.sum(alias).cast("long")
-        elif spec[0] == "min":
-            e = F.min(alias).cast("long")
-        elif spec[0] == "max":
-            e = F.max(alias).cast("long")
-        else:  # avg: long / long is fractional division in Spark -> double
-            e = (F.sum(f"__{alias}_sum") / F.sum(f"__{alias}_nn")
-                 ).cast("double")
+        if spec[0] == "count":
+            e = F.col("cnt")
+        elif spec[0] == "avg":
+            # exact sum / exact non-null count, one double division: the
+            # result is bit-identical to any engine dividing the same ints
+            nn = F.col(f"nn{j[spec[1]]}")
+            e = F.when(nn > 0, F.col(f"sum{j[spec[1]]}") / nn) \
+                .cast("double")
+        else:
+            e = F.col(f"{_PARTIAL_OF[spec[0]]}{j[spec[1]]}")
         exprs.append(e.alias(alias))
-    return parts.agg(*exprs)
-
-
-def _make_value_counts_kernel(out_dir: str, column: str,
-                              predicates: dict | None = None):
-    """Per-bucket partial (value, cnt) pairs at the codec layer — the
-    map-side combine of a GROUP BY: dict-coded chunks bincount the packed
-    code stream against the small dictionary store (the n-row column is
-    never materialized), RLE chunks emit run values with run lengths, and
-    only other codecs decode fully (chunk.chunk_value_counts). With
-    predicates, the same mask tiers as _make_group_agg_kernel apply."""
-    predicates = predicates or {}
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        manifest = Manifest(out_dir)
-        for batch in batches:
-            flags = (batch.column("all_match").to_pylist()
-                     if "all_match" in batch.schema.names
-                     else [True] * batch.num_rows)
-            for bucket, bucket_all in zip(batch.column("bucket").to_pylist(),
-                                          flags):
-                need_mask = bool(predicates) and not bucket_all
-                masks: dict[int, "np.ndarray | None"] = {}
-                if need_mask:
-                    masks = _bucket_chunk_masks(manifest, bucket, predicates)
-                    if not masks:
-                        continue
-                flt = ([("chunk_seq", "in", sorted(masks))]
-                       if need_mask else None)
-                t = pq.read_table(manifest.chunk_read_path(column, bucket),
-                                  filters=flt)
-                parts = [
-                    chunklib.chunk_value_counts(
-                        p, json.loads(m), int(nr),
-                        mask=masks[int(s)] if need_mask else None)
-                    for s, m, p, nr in zip(t.column("chunk_seq").to_pylist(),
-                                           t.column("meta").to_pylist(),
-                                           t.column("payload").to_pylist(),
-                                           t.column("n_rows").to_pylist())
-                ]
-                if parts:
-                    out = pa.concat_tables(parts)
-                    yield from out.rename_columns(
-                        [column, "cnt"]).to_batches()
-
-    return kernel
+    return df.select(*exprs)
 
 
 def value_counts_table(spark: SparkSession, out_dir: str, column: str,
@@ -2234,177 +2196,15 @@ def value_counts_table(spark: SparkSession, out_dir: str, column: str,
     """``SELECT col, COUNT(*) [WHERE ...] GROUP BY col`` pushed to the
     codec layer; returns ``(column, cnt long)`` with SQL GROUP BY
     semantics (null is a group). Partial counts come out of each bucket's
-    codecs (dictionary bincount / RLE run lengths — see
-    ``_make_value_counts_kernel``) and the tiny per-bucket partials
-    shuffle into the final groupBy-sum: a proper partial aggregation whose
-    shuffle volume is O(buckets x ndv), not O(rows). ``predicates``
-    (round 4) use decode_table specs with count_table's cost tiers —
-    proven buckets/chunks count unmasked, boundary chunks decode their
-    predicate columns to mask the packed code stream."""
-    if column == "cnt":
-        raise ValueError("column name 'cnt' collides with the count alias")
-    meta, nonempty = _plan_store(out_dir)
-    if column not in meta["columns"]:
-        raise ValueError(
-            f"unknown column {column!r}; store has {meta['columns']}")
-    spark_schema = T.StructType.fromJson(meta["spark_schema"])
-    field = {f.name: f for f in spark_schema.fields}[column]
-    out_schema = T.StructType([
-        T.StructField(column, field.dataType, True),
-        T.StructField("cnt", T.LongType(), False),
-    ])
-    by_name = {f.name: f.dataType.simpleString() for f in spark_schema.fields}
-    preds = _normalize_predicates(predicates or {}, by_name)
-    full, partial, _ = _classify_records(nonempty, preds)
-    rows = [(int(r["bucket"]), True) for r in full] \
-        + [(int(r["bucket"]), False) for r in partial]
-    if not rows:
-        return spark.createDataFrame([], out_schema)
-    buckets_df = spark.createDataFrame(
-        sorted(rows),
-        T.StructType([T.StructField("bucket", T.LongType(), False),
-                      T.StructField("all_match", T.BooleanType(), False)])
-    ).repartition(len(rows))
-    partials = buckets_df.mapInArrow(
-        _make_value_counts_kernel(out_dir, column, preds), out_schema)
-    if not merge:
-        # pre-merge per-bucket partials: the caller performs the single
-        # groupBy itself — e.g. the SQL router re-keys on a derived
-        # expression FIRST so map-side combine collapses on the final
-        # (low-cardinality) key instead of shuffling raw groups
-        return partials
-    return partials.groupBy(column).agg(
-        F.sum("cnt").cast("long").alias("cnt"))
-
-
-def _bucket_chunk_masks(manifest: "Manifest", bucket: int,
-                        predicates: dict) -> dict:
-    """Per-chunk predicate masks for one bucket (shared by the grouped
-    kernels): chunk zone maps prune no-match chunks, the all-match proof
-    maps a chunk to ``None`` (aggregate unmasked), and only undecided
-    chunks decode their predicate columns for an exact bool[n] mask.
-    Chunks with a zero-match mask are omitted entirely."""
-    pred_cols = list(predicates)
-    masks: dict[int, "np.ndarray | None"] = {}
-    col_meta: dict[str, dict[int, tuple[dict, int]]] = {}
-    keep: set[int] | None = None
-    for c in pred_cols:
-        t = pq.read_table(manifest.chunk_read_path(c, bucket),
-                          columns=["chunk_seq", "meta", "n_rows"])
-        rows = {int(s): (json.loads(m), int(nr))
-                for s, m, nr in zip(t.column("chunk_seq").to_pylist(),
-                                    t.column("meta").to_pylist(),
-                                    t.column("n_rows").to_pylist())}
-        ok = {s for s, (m, nr) in rows.items()
-              if _chunk_survives(m, predicates[c], nr)}
-        keep = ok if keep is None else keep & ok
-        col_meta[c] = rows
-    undecided = []
-    for s in sorted(keep or ()):
-        if all(_zone_all_match(col_meta[c][s][0], predicates[c],
-                               col_meta[c][s][1])
-               for c in pred_cols):
-            masks[s] = None  # proven all-match, unmasked
-        else:
-            undecided.append(s)
-    payloads = {
-        c: _read_chunk_payloads(manifest, c, bucket, undecided)
-        for c in pred_cols
-    } if undecided else {}
-    for s in undecided:
-        arrs = {}
-        for c in pred_cols:
-            m, nr = col_meta[c][s]
-            arrs[c] = chunklib.decode_array(payloads[c][s], m, nr)
-        mask = np.asarray(_chunk_mask(arrs, predicates).fill_null(False),
-                          dtype=bool)
-        if mask.any():
-            masks[s] = mask
-    return masks
-
-
-def _make_group_agg_kernel(out_dir: str, group_col: str, agg_col: str,
-                           predicates: dict | None = None,
-                           count_only: bool = False):
-    """Per-bucket partial (group, cnt, sum) rows at the codec layer — the
-    map-side combine of GROUP BY g -> count(*), sum(a): dict-coded group
-    chunks aggregate on the packed code stream (bincount + np.add.at); the
-    group column never materializes beyond its dictionary store
-    (chunk.chunk_group_sums). Chunk boundaries align across columns, so
-    zipping the two chunk files by chunk_seq is exact. With predicates,
-    all-match buckets (flag column) and all-match chunks (zone proofs)
-    stay unmasked; only boundary chunks decode predicate columns for an
-    exact row mask."""
-    predicates = predicates or {}
-    pred_cols = list(predicates)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        manifest = Manifest(out_dir)
-        for batch in batches:
-            flags = (batch.column("all_match").to_pylist()
-                     if "all_match" in batch.schema.names
-                     else [True] * batch.num_rows)
-            for bucket, bucket_all in zip(batch.column("bucket").to_pylist(),
-                                          flags):
-                need_mask = bool(pred_cols) and not bucket_all
-                masks: dict[int, "np.ndarray | None"] = {}
-                if need_mask:
-                    masks = _bucket_chunk_masks(manifest, bucket, predicates)
-                if need_mask and not masks:
-                    continue
-                flt = ([("chunk_seq", "in", sorted(masks))]
-                       if need_mask else None)
-                gt = pq.read_table(manifest.chunk_read_path(group_col, bucket),
-                                   filters=flt)
-                if count_only:
-                    # COUNT(col): metas only; payload bytes are read just
-                    # for chunks whose meta shows nulls (validity section)
-                    at = pq.read_table(
-                        manifest.chunk_read_path(agg_col, bucket),
-                        columns=["chunk_seq", "meta"], filters=flt)
-                    metas = {int(s): json.loads(m)
-                             for s, m in zip(
-                                 at.column("chunk_seq").to_pylist(),
-                                 at.column("meta").to_pylist())}
-                    nseqs = [s for s, m in metas.items()
-                             if int(m.get("nulls", 0))]
-                    pays = (_read_chunk_payloads(
-                        manifest, agg_col, bucket, nseqs) if nseqs else {})
-                    a_by_seq = {s: (m, pays.get(s))
-                                for s, m in metas.items()}
-                else:
-                    at = pq.read_table(
-                        manifest.chunk_read_path(agg_col, bucket),
-                        filters=flt)
-                    a_by_seq = {
-                        int(s): (json.loads(m), p)
-                        for s, m, p in zip(
-                            at.column("chunk_seq").to_pylist(),
-                            at.column("meta").to_pylist(),
-                            at.column("payload").to_pylist())
-                    }
-                parts = []
-                for s, gm, gp, nr in zip(gt.column("chunk_seq").to_pylist(),
-                                         gt.column("meta").to_pylist(),
-                                         gt.column("payload").to_pylist(),
-                                         gt.column("n_rows").to_pylist()):
-                    if need_mask:
-                        if int(s) not in masks:
-                            continue  # pruned or zero-match chunk
-                        mask = masks[int(s)]
-                    else:
-                        mask = None
-                    am, ap = a_by_seq[int(s)]
-                    parts.append(chunklib.chunk_group_sums(
-                        gp, json.loads(gm), ap, am, int(nr), mask=mask,
-                        count_only=count_only))
-                if parts:
-                    out = pa.concat_tables(parts)
-                    yield from out.rename_columns(
-                        [group_col, "cnt", "sum", "nn", "mn", "mx"]
-                    ).to_batches()
-
-    return kernel
+    code streams (see ``_make_group_multi_kernel``) and the tiny
+    per-bucket partials shuffle into the final groupBy-sum: a proper
+    partial aggregation whose shuffle volume is O(buckets x ndv), not
+    O(rows). ``predicates`` (round 4) use decode_table specs with
+    count_table's cost tiers — proven buckets/chunks count unmasked,
+    boundary chunks decode their predicate columns to mask the packed code
+    stream. ``merge=False`` returns the pre-merge per-bucket partials."""
+    return _aggregate(spark, out_dir, [(column, None, column)], [],
+                      predicates, merge)
 
 
 def group_agg_table(spark: SparkSession, out_dir: str, group_col: str,
@@ -2421,16 +2221,10 @@ def group_agg_table(spark: SparkSession, out_dir: str, group_col: str,
     be wrong under nulls); MIN/MAX per group are ``mn``/``mx`` cast back to
     the column's own type (the kernels accumulate in the int64 domain).
 
-    Scale shape matches :func:`value_counts_table`: per-bucket partials are
-    O(buckets x ndv) rows into the final groupBy-sum, never O(rows) — the
-    per-language token-total query over 10^12 documents shuffles a few
-    thousand rows. ``predicates`` (round 4) use the same specs as
-    :func:`decode_table` and keep the same cost tiers as
-    :func:`count_table`: proven-no-match buckets/chunks are skipped off
-    zone maps, proven-all-match ones aggregate unmasked, and only boundary
-    chunks decode their predicate columns to mask the packed group code
-    stream — a time-windowed per-language rollup on a ts-clustered store
-    does predicate work at the two boundary buckets only.
+    This is :func:`group_multi_table` with one group column and one agg
+    spec, under the unindexed partial names. Scale shape: per-bucket
+    partials are O(buckets x ndv) rows into the final groupBy-sum, never
+    O(rows). ``predicates`` (round 4) keep :func:`count_table`'s cost tiers.
 
     ``count_only`` (round 5) is the grouped COUNT(col) pushdown: only
     ``cnt``/``nn`` are real (sum/mn/mx come back NULL), ANY stored column
@@ -2438,211 +2232,35 @@ def group_agg_table(spark: SparkSession, out_dir: str, group_col: str,
     payload is read only for null-carrying chunks, validity section
     only, so a per-language COUNT(text) reads group codes + bitmaps,
     never FSST text bytes."""
-    for col, role in ((group_col, "group"), (agg_col, "agg")):
-        if col in ("cnt", "sum", "nn", "mn", "mx"):
-            raise ValueError(
-                f"{role} column name {col!r} collides with an output alias")
-    if group_col == agg_col:
-        raise ValueError("group and agg columns must differ")
-    meta, nonempty = _plan_store(out_dir)
-    for col in (group_col, agg_col):
-        if col not in meta["columns"]:
-            raise ValueError(
-                f"unknown column {col!r}; store has {meta['columns']}")
-    spark_schema = T.StructType.fromJson(meta["spark_schema"])
-    by_field = {f.name: f for f in spark_schema.fields}
-    a_type = by_field[agg_col].dataType.simpleString()
-    if not count_only and a_type not in _INTEGRAL_TYPES \
-            and not _is_predicate_type(a_type):
-        raise ValueError(
-            f"grouped-agg pushdown needs an integral or time agg column; "
-            f"{agg_col!r} is {a_type} (float sums are order-dependent; "
-            f"decode_table + DataFrame agg handles those). COUNT(col) over "
-            f"any type: pass count_only=True")
-    # time columns aggregate in their epoch int64 domain: mn/mx are epoch
-    # values (micros for timestamps, days for dates) the caller casts back;
-    # sum over a time column is epoch arithmetic (SQL has no sum(timestamp))
-    out_schema = T.StructType([
-        T.StructField(group_col, by_field[group_col].dataType, True),
-        T.StructField("cnt", T.LongType(), False),
-        T.StructField("sum", T.LongType(), True),
-        T.StructField("nn", T.LongType(), False),
-        T.StructField("mn", T.LongType(), True),
-        T.StructField("mx", T.LongType(), True),
-    ])
-    by_name = {f.name: f.dataType.simpleString() for f in spark_schema.fields}
-    preds = _normalize_predicates(predicates or {}, by_name)
-    full, partial, _ = _classify_records(nonempty, preds)
-    # proven buckets skip all predicate work in the kernel (flag column);
-    # boundary buckets decode predicate columns and mask the code stream
-    rows = [(int(r["bucket"]), True) for r in full] \
-        + [(int(r["bucket"]), False) for r in partial]
-    if not rows:
-        return spark.createDataFrame([], out_schema)
-    buckets_df = spark.createDataFrame(
-        sorted(rows),
-        T.StructType([T.StructField("bucket", T.LongType(), False),
-                      T.StructField("all_match", T.BooleanType(), False)])
-    ).repartition(len(rows))
-    partials = buckets_df.mapInArrow(
-        _make_group_agg_kernel(out_dir, group_col, agg_col, preds,
-                               count_only=count_only),
-        out_schema)
-    if not merge:
-        # pre-merge per-bucket partials (see value_counts_table): the
-        # caller merges once on its own (derived) final key
-        return partials
-    return partials.groupBy(group_col).agg(
-        F.sum("cnt").cast("long").alias("cnt"),
-        F.sum("sum").cast("long").alias("sum"),
-        F.sum("nn").cast("long").alias("nn"),
-        F.min("mn").cast("long").alias("mn"),
-        F.max("mx").cast("long").alias("mx"))
-
-
-def _make_group_multi_kernel(out_dir: str,
-                             group_specs: list[tuple[str, object, str]],
-                             agg_specs: list[tuple[str, bool]],
-                             predicates: dict | None = None,
-                             out_names: list[str] | None = None):
-    """Per-bucket partial (g0..gk, cnt[, per-agg sum/nn/mn/mx]) rows at the
-    codec layer —
-    the map-side combine of GROUP BY g0, g1, ... Chunk boundaries align
-    across columns, so zipping the chunk files by chunk_seq is exact; the
-    composite-key aggregation itself is chunk.chunk_group_multi (ALL agg
-    columns scatter through one combined key + np.unique pass). Predicate
-    handling mirrors _make_group_agg_kernel (bucket flags, zone proofs,
-    boundary-chunk masks). ``agg_specs`` is [(col, count_only)] per agg
-    column; a count-only column's payloads are read just for null-carrying
-    chunks (validity section), never decoded.
-
-    ``group_specs`` is [(src_col, transform|None, out_name)] per group
-    dimension (round 5): a transform derives the key
-    (chunk.apply_group_transform — to_date/date_trunc/year...) inside the
-    kernel, before code computation; a source column shared by several
-    derived keys is read once."""
-    predicates = predicates or {}
-    pred_cols = list(predicates)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        manifest = Manifest(out_dir)
-        read_cols = list(dict.fromkeys(src for src, _, _ in group_specs))
-        names = out_names or (
-            [out for _, _, out in group_specs] + ["cnt"]
-            + [f"{k}{j}" for j in range(len(agg_specs))
-               for k in ("sum", "nn", "mn", "mx")])
-        for batch in batches:
-            flags = (batch.column("all_match").to_pylist()
-                     if "all_match" in batch.schema.names
-                     else [True] * batch.num_rows)
-            for bucket, bucket_all in zip(batch.column("bucket").to_pylist(),
-                                          flags):
-                need_mask = bool(pred_cols) and not bucket_all
-                masks: dict[int, "np.ndarray | None"] = {}
-                if need_mask:
-                    masks = _bucket_chunk_masks(manifest, bucket, predicates)
-                if need_mask and not masks:
-                    continue
-                flt = ([("chunk_seq", "in", sorted(masks))]
-                       if need_mask else None)
-                tabs = {c: pq.read_table(manifest.chunk_read_path(c, bucket),
-                                         filters=flt)
-                        for c in read_cols}
-                by_seq = {
-                    c: {int(s): (json.loads(m), p)
-                        for s, m, p in zip(t.column("chunk_seq").to_pylist(),
-                                           t.column("meta").to_pylist(),
-                                           t.column("payload").to_pylist())}
-                    for c, t in tabs.items()
-                }  # keyed by SOURCE column; group_specs map srcs to keys
-                a_by_seq: list[dict] = []
-                for acol, co in agg_specs:
-                    if co:
-                        # COUNT(col): metas only; payload bytes read just
-                        # for chunks whose meta shows nulls (validity)
-                        at = pq.read_table(
-                            manifest.chunk_read_path(acol, bucket),
-                            columns=["chunk_seq", "meta"], filters=flt)
-                        metas = {int(s): json.loads(m)
-                                 for s, m in zip(
-                                     at.column("chunk_seq").to_pylist(),
-                                     at.column("meta").to_pylist())}
-                        nseqs = [s for s, m in metas.items()
-                                 if int(m.get("nulls", 0))]
-                        pays = (_read_chunk_payloads(
-                            manifest, acol, bucket, nseqs)
-                            if nseqs else {})
-                        a_by_seq.append({s: (m, pays.get(s))
-                                         for s, m in metas.items()})
-                    else:
-                        at = pq.read_table(
-                            manifest.chunk_read_path(acol, bucket),
-                            filters=flt)
-                        a_by_seq.append({
-                            int(s): (json.loads(m), p)
-                            for s, m, p in zip(
-                                at.column("chunk_seq").to_pylist(),
-                                at.column("meta").to_pylist(),
-                                at.column("payload").to_pylist())
-                        })
-                first = tabs[read_cols[0]]
-                parts = []
-                for s, nr in zip(first.column("chunk_seq").to_pylist(),
-                                 first.column("n_rows").to_pylist()):
-                    s = int(s)
-                    if need_mask:
-                        if s not in masks:
-                            continue
-                        mask = masks[s]
-                    else:
-                        mask = None
-                    g_chunks = []
-                    for src, transform, _ in group_specs:
-                        m, p = by_seq[src][s]
-                        g_chunks.append((p, m, transform))
-                    specs = []
-                    for (acol, co), seq_map in zip(agg_specs, a_by_seq):
-                        am, ap = seq_map[s]
-                        specs.append((ap, am, co))
-                    parts.append(chunklib.chunk_group_multi(
-                        g_chunks, None, int(nr), mask=mask,
-                        a_specs=specs))
-                if parts:
-                    out = pa.concat_tables(parts)
-                    yield from out.rename_columns(names).to_batches()
-
-    return kernel
+    return _aggregate(spark, out_dir, [(group_col, None, group_col)],
+                      [(agg_col, count_only)], predicates, merge
+                      ).toDF(group_col, "cnt", "sum", "nn", "mn", "mx")
 
 
 def group_multi_table(spark: SparkSession, out_dir: str,
                       group_cols: list[str | tuple],
-                      agg_col: str | None = None,
                       predicates: dict | None = None,
-                      count_only: bool = False,
                       agg_specs: list[tuple[str, bool]] | None = None,
                       merge: bool = True) -> DataFrame:
-    """``SELECT g0, g1, ..., COUNT(*)[, SUM(a)] [WHERE ...] GROUP BY
+    """``SELECT g0, g1, ..., COUNT(*)[, aggs] [WHERE ...] GROUP BY
     g0, g1, ...`` pushed to the codec layer (round-5 verdict, next #2) —
     the corpus-audit shape ``GROUP BY lang, source``. Returns
-    ``(g0..gk, cnt long[, sum, nn, mn, mx long])`` with SQL semantics
-    (nulls form groups; all-null agg groups get NULL sum/mn/mx; AVG =
-    sum/nn; MIN/MAX = mn/mx cast back to the column type).
+    ``(g0..gk, cnt long, sum{j}, nn{j}, mn{j}, mx{j} long ...)`` with SQL
+    semantics (nulls form groups; all-null agg groups get NULL
+    sum/mn/mx; AVG = sum/nn; MIN/MAX = mn/mx cast back to the column
+    type). Per-bucket partials are O(buckets x observed composite groups)
+    rows into the final groupBy-sum, never O(rows); dict-coded group
+    columns aggregate on combined packed code streams without
+    materializing group values per row. HAVING composes as a filter on
+    the returned DataFrame (see sqlagg).
 
-    Scale shape matches :func:`group_agg_table`: per-bucket partials are
-    O(buckets x observed composite groups) rows into the final
-    groupBy-sum, never O(rows); dict-coded group columns aggregate on
-    combined packed code streams without materializing group values per
-    row. HAVING composes as a filter on the returned partial-summed
-    DataFrame (see sqlagg). ``count_only`` (round 5) is the composite
-    COUNT(col) pushdown — see :func:`group_agg_table`.
-
-    ``agg_specs`` (round 5, multi-agg-column grouped pushdown) aggregates
-    SEVERAL columns in the one kernel pass: [(col, count_only)] per agg
-    column; the partial columns come back as ``sum{j}/nn{j}/mn{j}/mx{j}``
-    per spec index, so ``SELECT lang, count(*), sum(n_chars), count(html),
-    max(warc_ts) GROUP BY lang`` is one read of the group code streams
-    with each agg payload read once (count-only columns: validity only).
-    Mutually exclusive with ``agg_col``.
+    ``agg_specs`` aggregates SEVERAL columns in the one kernel pass:
+    [(col, count_only)] per agg column, partial columns
+    ``sum{j}/nn{j}/mn{j}/mx{j}`` per spec index, so ``SELECT lang,
+    count(*), sum(n_chars), count(html), max(warc_ts) GROUP BY lang`` is
+    one read of the group code streams with each agg payload read once.
+    A count-only column is the COUNT(col) pushdown over any stored type:
+    only ``nn{j}`` is real and the column reads validity sections only.
 
     A ``group_cols`` entry may be ``(src_col, transform, out_name)``
     (round 5, derived time keys): the kernel projects ``src_col`` through
@@ -2656,110 +2274,14 @@ def group_multi_table(spark: SparkSession, out_dir: str,
     sources assume a fixed-UTC wall clock (the SQL router gates on the
     session zone). Output field: date for "date", timestamp for "trunc"
     (Spark's date_trunc always returns timestamp), int for "part"."""
-    if agg_specs is not None and agg_col is not None:
-        raise ValueError("pass agg_col or agg_specs, not both")
-    legacy = agg_specs is None
-    specs = ([(agg_col, count_only)] if agg_col else []) if legacy \
-        else [(c, bool(co)) for c, co in agg_specs]
-    spec_cols = [c for c, _ in specs]
     if len(group_cols) < 1:
         raise ValueError("group_multi_table needs at least one group column")
-    # normalize group entries to (src, transform|None, out_name)
-    groups: list[tuple[str, tuple | None, str]] = []
-    for g in group_cols:
-        if isinstance(g, str):
-            groups.append((g, None, g))
-        else:
-            src, transform, out_name = g
-            groups.append((str(src),
-                           tuple(transform) if transform else None,
-                           str(out_name)))
-    out_group_names = [out for _, _, out in groups]
-    plain_srcs = {src for src, tr, _ in groups if tr is None}
-    if len(set(out_group_names)) != len(out_group_names):
-        raise ValueError("duplicate group columns")
-    if len(set(spec_cols)) != len(spec_cols):
-        raise ValueError("duplicate agg columns")
-    if legacy and specs:
-        quads = [("sum", "nn", "mn", "mx")]
-    else:
-        quads = [(f"sum{j}", f"nn{j}", f"mn{j}", f"mx{j}")
-                 for j in range(len(specs))]
-    reserved = {"cnt", "sum", "nn", "mn", "mx",
-                *(nm for quad in quads for nm in quad)}
-    for col in out_group_names + spec_cols:
-        if col in reserved:
-            raise ValueError(
-                f"column name {col!r} collides with an output alias")
-    # an agg column may equal a DERIVED key's source (min(ts) grouped by
-    # to_date(ts) is the natural first/last-per-day audit); only a plain
-    # group dimension conflicts
-    if any(c in plain_srcs or c in out_group_names for c in spec_cols):
-        raise ValueError("agg column must differ from group columns")
-    meta, nonempty = _plan_store(out_dir)
-    for col in [src for src, _, _ in groups] + spec_cols:
-        if col not in meta["columns"]:
-            raise ValueError(
-                f"unknown column {col!r}; store has {meta['columns']}")
-    spark_schema = T.StructType.fromJson(meta["spark_schema"])
-    by_field = {f.name: f for f in spark_schema.fields}
-    for src, transform, _ in groups:
-        if transform is None:
-            continue
-        s_type = by_field[src].dataType.simpleString()
-        if s_type not in _TIME_TYPES:
-            raise ValueError(
-                f"derived group key needs a time source column; "
-                f"{src!r} is {s_type}")
-    for acol, co in specs:
-        if co:
-            continue  # COUNT(col): any stored type counts
-        a_type = by_field[acol].dataType.simpleString()
-        if a_type not in _INTEGRAL_TYPES and not _is_predicate_type(a_type):
-            raise ValueError(
-                f"grouped-agg pushdown needs an integral or time agg "
-                f"column; {acol!r} is {a_type}. COUNT(col) over any "
-                f"type: pass count_only=True")
-    _DERIVED_FIELD = {"date": T.DateType(), "trunc": T.TimestampType(),
-                      "part": T.IntegerType()}
-    fields = [T.StructField(
-        out, by_field[src].dataType if transform is None
-        else _DERIVED_FIELD[transform[0]], True)
-        for src, transform, out in groups]
-    fields.append(T.StructField("cnt", T.LongType(), False))
-    for sname, nname, mnname, mxname in quads:
-        fields.append(T.StructField(sname, T.LongType(), True))
-        fields.append(T.StructField(nname, T.LongType(), False))
-        fields.append(T.StructField(mnname, T.LongType(), True))
-        fields.append(T.StructField(mxname, T.LongType(), True))
-    out_schema = T.StructType(fields)
-    by_name = {f.name: f.dataType.simpleString() for f in spark_schema.fields}
-    preds = _normalize_predicates(predicates or {}, by_name)
-    full, partial, _ = _classify_records(nonempty, preds)
-    rows = [(int(r["bucket"]), True) for r in full] \
-        + [(int(r["bucket"]), False) for r in partial]
-    if not rows:
-        return spark.createDataFrame([], out_schema)
-    buckets_df = spark.createDataFrame(
-        sorted(rows),
-        T.StructType([T.StructField("bucket", T.LongType(), False),
-                      T.StructField("all_match", T.BooleanType(), False)])
-    ).repartition(len(rows))
-    partials = buckets_df.mapInArrow(
-        _make_group_multi_kernel(out_dir, groups, specs, preds,
-                                 out_names=[f.name for f in out_schema]),
-        out_schema)
-    if not merge:
-        # pre-merge per-bucket partials (see value_counts_table): the
-        # caller merges once on its own (derived) final key
-        return partials
-    aggs = [F.sum("cnt").cast("long").alias("cnt")]
-    for sname, nname, mnname, mxname in quads:
-        aggs.append(F.sum(sname).cast("long").alias(sname))
-        aggs.append(F.sum(nname).cast("long").alias(nname))
-        aggs.append(F.min(mnname).cast("long").alias(mnname))
-        aggs.append(F.max(mxname).cast("long").alias(mxname))
-    return partials.groupBy(*out_group_names).agg(*aggs)
+    groups = [(g, None, g) if isinstance(g, str)
+              else (str(g[0]), tuple(g[1]) if g[1] else None, str(g[2]))
+              for g in group_cols]
+    return _aggregate(spark, out_dir, groups,
+                      [(c, bool(co)) for c, co in agg_specs or ()],
+                      predicates, merge)
 
 
 def decode_table(

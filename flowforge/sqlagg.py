@@ -13,8 +13,8 @@ shape the engine can answer —
 
     Aggregate(count(*) / count(col) over any stored type /
               sum / min / max / avg over int columns — any MIX of agg
-              columns (multi-column shapes ride one group_multi_table
-              pass with per-column partials), plus ARITHMETIC over those
+              columns (every column rides the one aggregate kernel pass
+              with per-column partials), plus ARITHMETIC over those
               aggregates (sum(a)/count(*), sum(a)+sum(b), count(*)*2 ...
               in SELECT or HAVING: embedded aggregates become hidden
               routed outputs, the expression rebuilds over them with the
@@ -34,12 +34,22 @@ shape the engine can answer —
                composition grouped)],
               one registered chunk-store view)
 
-— route it to ``agg_table`` / ``group_agg_table`` / ``value_counts_table``.
-Anything else falls back to the ordinary filter-pushdown execution of the
-same statement, so ``store_agg_sql`` is ALWAYS correct and at worst as
-fast as ``store_sql``. The analyzed plan (not the raw text) is the
+— route it to the engine's one aggregate kernel: ``agg_table`` when
+ungrouped, ``group_multi_table`` when grouped (both run
+``engine._make_group_multi_kernel`` and read the same partial columns
+``cnt, sum{j}, nn{j}, mn{j}, mx{j}``). Anything else falls back to the
+ordinary filter-pushdown execution of the same statement, so
+``store_agg_sql`` is ALWAYS correct and at worst as fast as
+``store_sql``. The analyzed plan (not the raw text) is the
 contract: a routable and a fallback run of the same statement return the
 same rows, pinned by tests/test_sqlagg.py against both paths and DuckDB.
+
+One documented envelope: a routed dim-side ``sum(d.w)`` over a store-dim
+join is rebuilt as ``cnt * w`` per matched (partial, dim row) pair (see
+:func:`_exec_join`). Long sums are exact, but a double ``w`` rounds once
+per product where Spark's row plan rounds once per added row, so the
+routed and fallback double sums can differ in the last bits (ulp level),
+the same envelope as Spark's own AQE-dependent partial orderings.
 
 Reference analog: the reference has no SQL surface at all (core/*.go is a
 fixed ETL); this is part of the repo's query-engine extension.
@@ -3147,10 +3157,9 @@ def _route(analyzed, stores: dict[str, str]) -> dict:
         if any(c.startswith("__") for c in group_cols + dsrcs):
             raise _Unroutable("column with reserved '__' prefix")
     elif group_cols:
-        # the codec-layer grouped kernels carry cnt/sum/nn/mn/mx partials
-        # per agg column — one column via group_agg_table's dict-bincount
-        # fast path, SEVERAL via group_multi_table(agg_specs=...) in one
-        # combined-key pass (round 5) — so the whole grouped family
+        # the aggregate kernel carries cnt/sum/nn/mn/mx partials per agg
+        # column, every column in one combined-key pass of
+        # group_multi_table(agg_specs=...) — so the whole grouped family
         # routes: count(*) + count/sum/avg/min/max over any mix of
         # columns; WHERE masks their code streams. COUNT(col) rides the
         # nn partial; columns referenced ONLY by count(col) never decode
@@ -3553,70 +3562,31 @@ def _orx_agg(spark: SparkSession, r: dict) -> DataFrame:
 def _agg_src_list(aggs: dict) -> tuple[list[str], set[str]]:
     """Ordered distinct agg source columns and the value-aggregated subset
     (a column is value-aggregated if any sum/avg/min/max spec touches it;
-    nncount alone = count-only). ONE derivation shared by the kernel-pass
-    builder and the orx composition — the kernel partial names (indexed
-    ``sum{j}`` vs legacy ``sum``) hang off len(src_list), so the two must
-    never diverge."""
-    src_list: list[str] = []
-    value_cols: set[str] = set()
-    for spec in aggs.values():
-        if spec[0] in ("sum", "avg", "min", "max", "nncount"):
-            if spec[1] not in src_list:
-                src_list.append(spec[1])
-            if spec[0] != "nncount":
-                value_cols.add(spec[1])
-    return src_list, value_cols
+    nncount alone = count-only): :func:`engine._agg_specs`, the derivation
+    the kernel passes themselves run, so the partial indices here and in
+    every pass agree."""
+    specs = engine._agg_specs(aggs)
+    return [c for c, _ in specs], {c for c, co in specs if not co}
 
 
 def _grouped_partials(spark: SparkSession, out_dir: str, aggs: dict,
-                      gargs: list, group_cols: list[str], derived: bool,
-                      preds: dict | None, merge: bool = True):
+                      gargs: list, preds: dict | None, merge: bool = True):
     """One grouped kernel pass: a per-group DataFrame carrying the partial
-    columns the finishing select reads — ``cnt`` plus ``sum/nn/mn/mx``
-    (indexed ``sum{j}``... when the multi-agg kernel runs) — and the
-    agg-column -> index map naming them (None for the legacy single
-    names). ``merge=False`` returns the pre-merge per-bucket partials:
-    the derived-scalar-key caller re-keys on the rebuilt expression FIRST
-    and performs the single groupBy itself, so map-side combine collapses
-    on the final low-cardinality key instead of shuffling raw groups."""
-    src_list, value_cols = _agg_src_list(aggs)
-    jmap: dict[str, int] | None = None
-    if len(src_list) > 1:
-        # several agg columns: ONE group_multi_table pass carries per-
-        # column partials (round 5) — the full corpus-audit SELECT routes
-        base = engine.group_multi_table(
-            spark, out_dir, gargs, predicates=preds or None,
-            agg_specs=[(c, c not in value_cols) for c in src_list],
-            merge=merge)
-        jmap = {c: j for j, c in enumerate(src_list)}
-    elif src_list:
-        # COUNT(col) with no value aggregates runs the kernels in
-        # count_only mode: the column's values never decode
-        count_only = not value_cols
-        if len(group_cols) > 1 or derived:
-            base = engine.group_multi_table(
-                spark, out_dir, gargs, agg_col=src_list[0],
-                predicates=preds or None, count_only=count_only,
-                merge=merge)
-        else:
-            base = engine.group_agg_table(spark, out_dir, group_cols[0],
-                                          src_list[0],
-                                          predicates=preds or None,
-                                          count_only=count_only,
-                                          merge=merge)
-    elif len(group_cols) > 1 or derived:
-        base = engine.group_multi_table(spark, out_dir, gargs,
-                                        predicates=preds or None,
-                                        merge=merge)
-    else:
-        base = engine.value_counts_table(spark, out_dir, group_cols[0],
-                                         predicates=preds or None,
-                                         merge=merge)
-    return base, jmap
+    columns the finishing select reads — ``cnt`` plus ``sum{j}/nn{j}/
+    mn{j}/mx{j}`` per agg column — and the agg-column -> index map naming
+    them. ``merge=False`` returns the pre-merge per-bucket partials: the
+    derived-scalar-key caller re-keys on the rebuilt expression FIRST and
+    performs the single groupBy itself, so map-side combine collapses on
+    the final low-cardinality key instead of shuffling raw groups."""
+    specs = engine._agg_specs(aggs)
+    base = engine.group_multi_table(spark, out_dir, gargs,
+                                    predicates=preds or None,
+                                    agg_specs=specs, merge=merge)
+    return base, {c: j for j, (c, _) in enumerate(specs)}
 
 
 def _orx_grouped(spark: SparkSession, r: dict, gargs: list,
-                 kcols: list[str], derived: bool):
+                 kcols: list[str]):
     """Grouped aggregates under a cross-column OR: one grouped kernel pass
     per inclusion-exclusion predicate set (A, B, and — only when an
     additive partial is read — A AND B), composed PER GROUP into a frame
@@ -3640,11 +3610,10 @@ def _orx_grouped(spark: SparkSession, r: dict, gargs: list,
     parts: list[tuple] = []  # (partial name, kind, aux nn name | None)
     seen: set[str] = set()
     src_probe, _ = _agg_src_list(aggs)  # same derivation as the passes
-    jmap_probe = ({c: j for j, c in enumerate(src_probe)}
-                  if len(src_probe) > 1 else None)
+    jmap_probe = {c: j for j, c in enumerate(src_probe)}
 
     def kn(kind: str, col: str) -> str:
-        return f"{kind}{jmap_probe[col]}" if jmap_probe is not None else kind
+        return f"{kind}{jmap_probe[col]}"
 
     def add(name: str, kind: str, aux: str | None = None):
         if name not in seen:
@@ -3676,11 +3645,9 @@ def _orx_grouped(spark: SparkSession, r: dict, gargs: list,
                        if spec[0] in ("min", "max") else spec)
                for alias, spec in aggs.items()}
     passes = []
-    jmap = None
     for i, p in enumerate(preds_list):
         b, jmap = _grouped_partials(
-            spark, out_dir, ab_aggs if i >= n_br else aggs, gargs,
-            gcols, derived, p)
+            spark, out_dir, ab_aggs if i >= n_br else aggs, gargs, p)
         passes.append(b)
     part_names = [n for n, _, _ in parts]
     tagged = [p.select(*[F.col(c).alias(f"{c}__{t}")
@@ -3729,8 +3696,8 @@ def _orx_grouped(spark: SparkSession, r: dict, gargs: list,
     return u.select(*sel), jmap
 
 
-#: kernel partial-column names in the grouped frames (cnt + the
-#: sum/nn/mn/mx quads, indexed when the multi-agg kernel ran)
+#: kernel partial-column names in the grouped frames (cnt + the indexed
+#: sum/nn/mn/mx quads); the unindexed names stay reserved too
 _PARTIAL_COL_RE = re.compile(r"^(cnt|(sum|nn|mn|mx)\d*)$")
 
 
@@ -3849,7 +3816,6 @@ def _exec_join(spark: SparkSession, r: dict):
         dsrcs = [dspec[1]] if dspec[0] == "cntd" else list(dspec[2])
     ddims = [s for s in dsrcs if s not in kcols]
     kgargs = list(jn.get("kernel_gargs") or kcols)
-    derived = any(not isinstance(g, str) for g in kgargs)
     if r.get("orx"):
         # cross-column OR (late round 5): the inclusion-exclusion
         # passes compose per kernel-key group BEFORE the dim join — the
@@ -3862,12 +3828,10 @@ def _exec_join(spark: SparkSession, r: dict):
         # only, never a column name)
         r2 = dict(r)
         r2["aggs"] = {**r["aggs"], "__orxjc": ("count",)}
-        base, jmap = _orx_grouped(spark, r2, kgargs + ddims,
-                                  kcols + ddims, derived)
+        base, jmap = _orx_grouped(spark, r2, kgargs + ddims, kcols + ddims)
     else:
         base, jmap = _grouped_partials(
-            spark, r["out_dir"], r["aggs"],
-            kgargs + ddims, kcols + ddims, derived,
+            spark, r["out_dir"], r["aggs"], kgargs + ddims,
             r["predicates"] or None, merge=False)
     jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
         spark._jsparkSession, jn["plan"].jplan)
@@ -4114,10 +4078,8 @@ def _execute_route(spark: SparkSession, r: dict) -> DataFrame:
                 if kname_ not in kcols:  # a raw src may back several keys
                     kcols.append(kname_)
                     gargs.append(garg)
-        derived = any(tr and tr[0] != "sqlexpr" for _, tr, _ in gspecs)
     else:
         gargs, kcols = list(group_cols), list(group_cols)
-        derived = False
     dspecs = {spec for spec in aggs.values()
               if spec[0] in ("cntd", "cntde")}
     if dspecs and not r.get("join"):
@@ -4155,11 +4117,10 @@ def _execute_route(spark: SparkSession, r: dict) -> DataFrame:
         # sum/avg/min/max over any mix of columns beside the distinct
         # count (late round 5, multi-column since the agg_specs kernel)
         src_list, value_cols = _agg_src_list(aggs)
-        jmap = ({c: j for j, c in enumerate(src_list)}
-                if len(src_list) > 1 else None)
+        jmap = {c: j for j, c in enumerate(src_list)}
 
         def kn(kind: str, col: str) -> str:
-            return f"{kind}{jmap[col]}" if jmap is not None else kind
+            return f"{kind}{jmap[col]}"
 
         if r.get("orx"):
             # cross-column OR: one composite-kernel pass per inclusion-
@@ -4181,7 +4142,7 @@ def _execute_route(spark: SparkSession, r: dict) -> DataFrame:
             for i, (sgn, p) in enumerate(zip(orx_signs, r["orx"])):
                 b, jmap = _grouped_partials(
                     spark, out_dir, ab_aggs if i >= n_br else aggs,
-                    gargs + ddims, kcols + ddims, derived, p)
+                    gargs + ddims, p)
                 passes.append(b.withColumn("__sign", F.lit(sgn)))
             base = passes[0]
             for b in passes[1:]:
@@ -4207,8 +4168,7 @@ def _execute_route(spark: SparkSession, r: dict) -> DataFrame:
                         .cast("long").alias(kn("mx", col)))
         else:
             base, jmap = _grouped_partials(
-                spark, out_dir, aggs, gargs + ddims, kcols + ddims,
-                derived, preds)
+                spark, out_dir, aggs, gargs + ddims, preds)
             fin_aggs = [
                 # count(*) over empty matches Spark's 0 (not null)
                 F.coalesce(F.sum("cnt"), F.lit(0))
@@ -4260,8 +4220,7 @@ def _execute_route(spark: SparkSession, r: dict) -> DataFrame:
             # real SQL group) — both sides are O(groups) rows
             eddims, edval = ddims_dval(extra)
             eb, _ = _grouped_partials(spark, out_dir, {},
-                                      gargs + eddims, kcols + eddims,
-                                      derived, preds)
+                                      gargs + eddims, preds)
             eagg = F.count_distinct(edval).cast("long").alias(dmap[extra])
             if not group_cols:
                 fin = fin.crossJoin(eb.agg(eagg))
@@ -4362,8 +4321,7 @@ def _execute_route(spark: SparkSession, r: dict) -> DataFrame:
                           and s[1] == strmm)}
         pdims = [pcol] if pcol not in kcols else []
         base, jmap = _grouped_partials(spark, out_dir, other,
-                                       gargs + pdims, kcols + pdims,
-                                       derived, preds)
+                                       gargs + pdims, preds)
         base = _apply_derived(base, r)
         wpart = (W.partitionBy(*[F.col(g) for g in group_cols])
                  if group_cols else W.partitionBy(F.lit(0)))
@@ -4408,7 +4366,7 @@ def _execute_route(spark: SparkSession, r: dict) -> DataFrame:
         src_list, value_cols = _agg_src_list(other)
 
         def knp(kind: str, col: str) -> str:
-            return f"{kind}{jmap[col]}" if jmap is not None else kind
+            return f"{kind}{jmap[col]}"
 
         fin_aggs = [F.coalesce(F.sum("cnt"), F.lit(0))
                     .cast("long").alias("cnt")]
@@ -4503,15 +4461,14 @@ def _execute_route(spark: SparkSession, r: dict) -> DataFrame:
         # grouping sets: one kernel pass at the finest (union-of-keys)
         # grouping, merged per group (the sqlexpr re-group below when
         # keys are derived), then per-set re-aggregation + union
-        base, jmap = _grouped_partials(spark, out_dir, aggs, gargs,
-                                       kcols, derived, preds,
+        base, jmap = _grouped_partials(spark, out_dir, aggs, gargs, preds,
                                        merge=not has_sqlexpr)
         base = _gsets_expand(_regroup_derived(base, r), r)
     elif r.get("orx"):
         # the inclusion-exclusion composition joins per-group across
         # passes, so each pass merges on the raw kernel keys; the derived
         # re-group runs over the composed frame
-        base, jmap = _orx_grouped(spark, r, gargs, kcols, derived)
+        base, jmap = _orx_grouped(spark, r, gargs, kcols)
         base = _regroup_derived(base, r)
     else:
         # derived scalar keys skip the kernel-side raw-key merge: the
@@ -4519,15 +4476,13 @@ def _execute_route(spark: SparkSession, r: dict) -> DataFrame:
         # the ONE groupBy below runs on the final keys, so map-side
         # combine collapses on the (low-cardinality) derived value even
         # when the raw source is high-cardinality
-        base, jmap = _grouped_partials(spark, out_dir, aggs, gargs,
-                                       kcols, derived, preds,
+        base, jmap = _grouped_partials(spark, out_dir, aggs, gargs, preds,
                                        merge=not has_sqlexpr)
         base = _regroup_derived(base, r)
 
     def kname(kind: str, col: str) -> str:
-        # partial-column name for (sum|nn|mn|mx, agg col): indexed when the
-        # multi-agg kernel ran, the legacy single names otherwise
-        return f"{kind}{jmap[col]}" if jmap is not None else kind
+        # partial-column name for (sum|nn|mn|mx, agg col)
+        return f"{kind}{jmap[col]}"
 
     by_field = None
     if any(spec[0] in ("min", "max") for spec in aggs.values()):

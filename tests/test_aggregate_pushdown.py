@@ -2,10 +2,11 @@
 
 Reference analog: the reference answers count-style health questions from
 its metrics channel without rereading parquet (core/main.go metrics loop);
-here COUNT(*) with predicates is answered from commit metadata + a
-predicate-column-only kernel, and GROUP BY counts come out of the codec
-layer (dictionary bincount / RLE run lengths) without materializing the
-column. Oracle in every test is an exact Spark computation on the source.
+here COUNT(*) with predicates is answered from commit metadata + the
+aggregate kernel decoding predicate columns only, and GROUP BY counts come
+out of the codec layer (packed dictionary code streams) without
+materializing the column. Oracle in every test is an exact Spark
+computation on the source.
 """
 
 from __future__ import annotations
@@ -63,13 +64,14 @@ def ts_store(spark, ts_df, tmp_path_factory):
 
 def test_count_no_predicates_is_metadata_only(spark, store, src_df,
                                               monkeypatch):
-    """Tier 1: bare COUNT(*) reads commit logs only — no chunk file opens
-    (pinned by poisoning the payload reader) and no driver-side commit
-    parse (read_commits stays uncalled on the distributed path)."""
+    """Tier 1: bare COUNT(*) is answered in the driver from commit records
+    — no chunk file opens (pinned by poisoning the payload reader) and no
+    kernel task (pinned by poisoning the kernel factory)."""
     def boom(*a, **kw):  # pragma: no cover - failure path
         raise AssertionError("chunk payload read on a metadata-only count")
 
     monkeypatch.setattr(engine, "_read_chunk_payloads", boom)
+    monkeypatch.setattr(engine, "_make_group_multi_kernel", boom)
     got = engine.count_table(spark, store).collect()[0]["cnt"]
     assert got == ROWS
 
@@ -103,7 +105,7 @@ def test_count_all_match_needs_no_kernel(spark, ts_store, ts_df,
     def boom(*a, **kw):  # pragma: no cover - failure path
         raise AssertionError("kernel ran though all buckets were proven")
 
-    monkeypatch.setattr(engine, "_make_count_kernel", boom)
+    monkeypatch.setattr(engine, "_make_group_multi_kernel", boom)
     got = engine.count_table(
         spark, ts_store,
         predicates={"ts": (0, 10 * 5_000)}).collect()[0]["cnt"]
@@ -166,7 +168,7 @@ def test_agg_no_predicates_is_metadata_only(spark, ts_store, ts_df,
     def boom(*a, **kw):  # pragma: no cover - failure path
         raise AssertionError("kernel ran on a metadata-only aggregate")
 
-    monkeypatch.setattr(engine, "_make_agg_kernel", boom)
+    monkeypatch.setattr(engine, "_make_group_multi_kernel", boom)
     got = engine.agg_table(spark, ts_store, _TS_AGGS).collect()[0]
     want = _ts_oracle(ts_df, 0, 10 * 5_000)
     assert got.asDict() == want.asDict()
@@ -600,7 +602,7 @@ def test_agg_nncount_no_predicates_is_metadata_only(spark, store, src_df,
     def boom(*a, **k):
         raise AssertionError("kernel ran on a metadata-only COUNT(col)")
 
-    monkeypatch.setattr(engine, "_make_agg_kernel", boom)
+    monkeypatch.setattr(engine, "_make_group_multi_kernel", boom)
     got = engine.agg_table(spark, store, {"c": ("nncount", "html")})
     assert got.collect()[0]["c"] \
         == src_df.filter(F.col("html").isNotNull()).count()
@@ -655,18 +657,18 @@ def test_group_multi_count_only_composite(spark, tmpdir_clean):
                                      "v double")
     out = os.path.join(tmpdir_clean, "enc")
     engine.run_encode(spark, df, out, buckets=4, salt_col="id")
-    got = engine.group_multi_table(spark, out, ["g1", "g2"], "v",
-                                   count_only=True)
-    g = {(r["g1"], r["g2"]): (r["cnt"], r["nn"]) for r in got.collect()}
+    got = engine.group_multi_table(spark, out, ["g1", "g2"],
+                                   agg_specs=[("v", True)])
+    g = {(r["g1"], r["g2"]): (r["cnt"], r["nn0"]) for r in got.collect()}
     w = {(r["g1"], r["g2"]): (r["cnt"], r["nn"])
          for r in df.groupBy("g1", "g2")
          .agg(F.count(F.lit(1)).alias("cnt"),
               F.count("v").alias("nn")).collect()}
     assert g == w
     got2 = engine.group_multi_table(
-        spark, out, ["g1", "g2"], "v", count_only=True,
+        spark, out, ["g1", "g2"], agg_specs=[("v", True)],
         predicates={"id": (100, 1000)})
-    g2_ = {(r["g1"], r["g2"]): (r["cnt"], r["nn"]) for r in got2.collect()}
+    g2_ = {(r["g1"], r["g2"]): (r["cnt"], r["nn0"]) for r in got2.collect()}
     w2 = {(r["g1"], r["g2"]): (r["cnt"], r["nn"])
           for r in df.filter(F.col("id").between(100, 1000))
           .groupBy("g1", "g2")

@@ -54,13 +54,13 @@ def _rows(df):
 def test_two_column_group_sum(spark, store):
     src = spark.read.parquet(DOCS)
     got = engine.group_multi_table(spark, store, ["lang", "source"],
-                                   "n_chars")
+                                   agg_specs=[("n_chars", False)])
     want = (src.groupBy("lang", "source")
             .agg(F.count("*").alias("cnt"),
-                 F.sum("n_chars").alias("sum"),
-                 F.count("n_chars").alias("nn"),
-                 F.min("n_chars").cast("long").alias("mn"),
-                 F.max("n_chars").cast("long").alias("mx")))
+                 F.sum("n_chars").alias("sum0"),
+                 F.count("n_chars").alias("nn0"),
+                 F.min("n_chars").cast("long").alias("mn0"),
+                 F.max("n_chars").cast("long").alias("mx0")))
     assert [f.dataType for f in got.schema.fields] \
         == [f.dataType for f in want.schema.fields]
     assert _rows(got) == _rows(want)
@@ -69,13 +69,13 @@ def test_two_column_group_sum(spark, store):
 def test_predicates_mask_composite(spark, store):
     src = spark.read.parquet(DOCS)
     got = engine.group_multi_table(
-        spark, store, ["lang", "source"], "n_chars",
+        spark, store, ["lang", "source"], agg_specs=[("n_chars", False)],
         predicates={"n_chars": (100, 2000), "lang": ("in", ["en", "de"])}
-    ).select("lang", "source", "cnt", "sum")
+    ).select("lang", "source", "cnt", "sum0")
     want = (src.filter((F.col("n_chars").between(100, 2000))
                        & F.col("lang").isin("en", "de"))
             .groupBy("lang", "source")
-            .agg(F.count("*").alias("cnt"), F.sum("n_chars").alias("sum")))
+            .agg(F.count("*").alias("cnt"), F.sum("n_chars").alias("sum0")))
     assert _rows(got) == _rows(want)
 
 
@@ -91,12 +91,12 @@ def test_three_columns_counts_only(spark, store):
 def test_null_groups_and_null_sums(spark, null_store):
     src = engine.decode_table(spark, null_store)
     got = engine.group_multi_table(spark, null_store, ["lang", "source"],
-                                   "n_chars")
+                                   agg_specs=[("n_chars", False)])
     want = (src.groupBy("lang", "source")
-            .agg(F.count("*").alias("cnt"), F.sum("n_chars").alias("sum"),
-                 F.count("n_chars").alias("nn"),
-                 F.min("n_chars").cast("long").alias("mn"),
-                 F.max("n_chars").cast("long").alias("mx")))
+            .agg(F.count("*").alias("cnt"), F.sum("n_chars").alias("sum0"),
+                 F.count("n_chars").alias("nn0"),
+                 F.min("n_chars").cast("long").alias("mn0"),
+                 F.max("n_chars").cast("long").alias("mx0")))
     assert _rows(got) == _rows(want)
     # the null-lang groups really exist
     assert got.filter(F.col("lang").isNull()).count() > 0
@@ -110,11 +110,13 @@ def test_validation(spark, store):
     with pytest.raises(ValueError, match="collides"):
         engine.group_multi_table(spark, store, ["lang", "cnt"])
     with pytest.raises(ValueError, match="differ"):
-        engine.group_multi_table(spark, store, ["lang"], "lang")
+        engine.group_multi_table(spark, store, ["lang"],
+                                 agg_specs=[("lang", False)])
     with pytest.raises(ValueError, match="unknown column"):
         engine.group_multi_table(spark, store, ["nope"])
     with pytest.raises(ValueError, match="integral"):
-        engine.group_multi_table(spark, store, ["lang"], "text")
+        engine.group_multi_table(spark, store, ["lang"],
+                                 agg_specs=[("text", False)])
 
 
 # --------------------------------------------------------------------------
@@ -178,9 +180,9 @@ def test_agg_specs_with_predicates(spark, store):
 
 
 def test_agg_specs_validation(spark, store):
-    with pytest.raises(ValueError, match="not both"):
-        engine.group_multi_table(spark, store, ["lang"], "n_chars",
-                                 agg_specs=[("doc_id", False)])
+    # the single-agg agg_col/count_only form is gone: agg_specs only
+    with pytest.raises(TypeError, match="agg_col"):
+        engine.group_multi_table(spark, store, ["lang"], agg_col="n_chars")
     with pytest.raises(ValueError, match="duplicate agg"):
         engine.group_multi_table(
             spark, store, ["lang"],
@@ -232,13 +234,14 @@ def test_derived_time_keys_direct_api(spark, ts_store):
          [F.to_date("ts").alias("day"), F.col("lang")]),
     ]
     for gspec, exprs in cases:
-        fast = engine.group_multi_table(spark, out, gspec, agg_col="n")
+        fast = engine.group_multi_table(spark, out, gspec,
+                                        agg_specs=[("n", False)])
         slow = df.groupBy(*exprs).agg(
             F.count(F.lit(1)).alias("cnt"),
-            F.sum("n").cast("long").alias("sum"),
-            F.count("n").alias("nn"),
-            F.min("n").cast("long").alias("mn"),
-            F.max("n").cast("long").alias("mx"))
+            F.sum("n").cast("long").alias("sum0"),
+            F.count("n").alias("nn0"),
+            F.min("n").cast("long").alias("mn0"),
+            F.max("n").cast("long").alias("mx0"))
         assert [f.dataType for f in fast.schema.fields] \
             == [f.dataType for f in slow.schema.fields], gspec
         assert sorted(map(repr, map(tuple, fast.collect()))) \
