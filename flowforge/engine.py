@@ -18,7 +18,9 @@ converge to the same bytes.
 Scale notes (100 TB / 1000 executors):
 - the only shuffle is the single explicit repartition on the salt; the
   xxhash64(url) salt is uniform even under Zipf host skew, so no straggler
-  buckets; AQE stays enabled for everything else;
+  buckets. Every other kernel (direct encode, decode, top-k, aggregates)
+  launches through :func:`_launch`: no Python stage and no exchange runs
+  in front of it;
 - the kernel streams contiguous bucket groups out of its partition iterator
   (never materializes the whole task input);
 - chunk files are hive-partitioned by column -> single-column decodes
@@ -40,6 +42,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import catalog, selector
 from .catalog import Manifest, StorePlanError
@@ -113,7 +116,7 @@ _CHUNK_FILE_SCHEMA = pa.schema([
 
 
 # --------------------------------------------------------------------------
-# bucket -> task assignment
+# bucket -> task assignment and kernel launch
 # --------------------------------------------------------------------------
 #
 # ``repartition(n, col)`` hash-partitions: with n buckets into n partitions
@@ -189,8 +192,8 @@ def _partition_one_bucket_per_task(spark: SparkSession, salted: DataFrame,
         key_expr = F.element_at(F.create_map(*entries), F.col(BUCKET_COL))
         out = salted.repartition(n, key_expr)
     else:
-        mapping = spark.createDataFrame(
-            [(int(b), int(k)) for b, k in zip(todo, keys)],
+        mapping = _arrow_frame(
+            spark, [(int(b), int(k)) for b, k in zip(todo, keys)],
             T.StructType([T.StructField(BUCKET_COL, T.LongType(), False),
                           T.StructField(_PKEY_COL, T.LongType(), False)]),
         )
@@ -200,6 +203,42 @@ def _partition_one_bucket_per_task(spark: SparkSession, salted: DataFrame,
             .drop(_PKEY_COL)
         )
     return out.sortWithinPartitions(BUCKET_COL, salt_col)
+
+
+def _arrow_frame(spark: SparkSession, rows: list[tuple],
+                 schema: T.StructType) -> DataFrame:
+    """``rows`` as a frame planned as a LocalTableScan, with no Python
+    task: the engine never builds a frame from a Python list (see
+    encode_path)."""
+    arrow = to_arrow_schema(schema)
+    return spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(arrow.names, r)) for r in rows], schema=arrow), schema)
+
+
+def _task_slices(n_rows: int, n_tasks: int) -> list[tuple[int, int]]:
+    """Contiguous ``[lo, hi)`` row ranges in row order, one per task, whose
+    sizes differ by at most one; never more ranges than rows."""
+    n = min(n_rows, n_tasks)
+    return [(i * n_rows // n, (i + 1) * n_rows // n) for i in range(n)]
+
+
+def _launch(spark: SparkSession, work: pa.RecordBatch, kernel,
+            schema: T.StructType, n_tasks: int | None = None) -> DataFrame:
+    """Run ``kernel`` with task i on slice i of the work rows (one row per
+    task by default). ``spark.range(0, n, 1, n)`` puts id i alone in
+    partition i: one map stage, no exchange, no balls-in-bins. The rows
+    ride in the closure, which PySpark broadcasts once over 1 MB."""
+    slices = _task_slices(work.num_rows, n_tasks or work.num_rows)
+    if not slices:
+        return _arrow_frame(spark, [], schema)
+
+    def task(ids: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in ids:
+            for i in batch.column(0).to_pylist():
+                lo, hi = slices[i]
+                yield from kernel(iter([work.slice(lo, hi - lo)]))
+
+    return spark.range(0, len(slices), 1, len(slices)).mapInArrow(task, schema)
 
 
 # --------------------------------------------------------------------------
@@ -490,7 +529,7 @@ def encode_table(
     todo = [b for b in range(bucket_offset, bucket_offset + buckets)
             if b not in committed]
     if not todo:
-        return spark.createDataFrame([], METRICS_SCHEMA)
+        return _arrow_frame(spark, [], METRICS_SCHEMA)
 
     bucketed = df.withColumn(BUCKET_COL, bucket_expr)
     if len(todo) < buckets:
@@ -809,49 +848,19 @@ def encode_path(
     )
     committed = manifest.committed_buckets(phash) if resume else set()
     todo = [p for p in plan if p["bucket"] not in committed]
-    if not todo:
-        return spark.createDataFrame([], METRICS_SCHEMA)
-    plan_schema = T.StructType([
-        T.StructField("bucket", T.LongType(), False),
-        T.StructField("file", T.StringType(), False),
-        T.StructField("row_groups", T.ArrayType(T.IntegerType()), False),
-    ])
-    plan_df = spark.createDataFrame(
-        [(p["bucket"], p["file"], p["row_groups"]) for p in todo], plan_schema)
-    # tasks scale with CORES, not buckets (round 5, encode-wall item): one
-    # task per bucket pays a Python-worker round trip per bucket — measured
-    # ~50 ms x 62 tasks at local[4], a visible slice of the wall. Group
-    # consecutive buckets (file locality preserved; the kernel already
-    # iterates its batch) into at most 4 tasks/core, assigned EVENLY via
-    # the same Murmur3-inverted keys the salted path uses — a plain
-    # repartition(n) would balls-in-bins the groups and reintroduce the
-    # round-1 straggler. At 1000 executors buckets >> 4x cores, so this is
-    # the identity there; commit granularity stays per-bucket either way.
-    # the 4-core floor keeps the task layout IDENTICAL across small core
-    # counts (the N vs 4N scaling evidence compares local[1] to local[4]:
-    # with a parallelism-proportional count the 1-core job would run fewer,
-    # fatter tasks and bank an overhead saving the 4-core job cannot,
-    # understating measured scaling efficiency)
-    n_tasks = min(len(todo),
-                  4 * max(4, int(spark.sparkContext.defaultParallelism)))
-    if n_tasks < len(todo):
-        keys = _bijective_partition_keys(n_tasks)
-        per = -(-len(todo) // n_tasks)
-        key_col = [int(keys[i // per]) for i in range(len(todo))]
-        key_df = spark.createDataFrame(
-            [(p["bucket"], k) for p, k in zip(todo, key_col)],
-            T.StructType([T.StructField("bucket", T.LongType(), False),
-                          T.StructField(_PKEY_COL, T.LongType(), False)]))
-        plan_df = (plan_df.join(F.broadcast(key_df), "bucket")
-                   .repartition(n_tasks, F.col(_PKEY_COL))
-                   .sortWithinPartitions("bucket")
-                   .drop(_PKEY_COL))
-    else:
-        plan_df = plan_df.repartition(len(todo))
-    return plan_df.mapInArrow(
+    # Consecutive buckets share a task (file locality; commits stay per
+    # bucket): at most 4 tasks per core, with a 4-core floor so local[1]
+    # and local[4] run the same layout for the N vs 4N scaling evidence.
+    # The plan rows never go through createDataFrame on a list: PySpark 4.1
+    # runs that as an identity-map PythonRDD stage of pickled rows
+    # (_createFromLocal -> parallelize -> _to_java_object_rdd ->
+    # _reserialize; pyspark/sql/session.py:1227, pyspark/core/rdd.py
+    # 1181-1186 and 4779-4788), and a shuffle must then spread the rows over
+    # the tasks: about 0.55 s of a 1.4 s encode at local[4] on 4 cores.
+    return _launch(
+        spark, pa.RecordBatch.from_pylist(todo),
         _make_direct_kernel(out_dir, chunk_rows, sort_col, columns, phash),
-        METRICS_SCHEMA,
-    )
+        METRICS_SCHEMA, 4 * max(4, int(spark.sparkContext.defaultParallelism)))
 
 
 def run_encode_path(spark: SparkSession, src: str | list[str], out_dir: str, **kw) -> list:
@@ -1734,14 +1743,9 @@ def topk_table(spark: SparkSession, out_dir: str, order_col: str, k: int,
     keep = _topk_bucket_plan(nonempty, order_col, k, descending, preds)
     out_names = list(dict.fromkeys(list(use_cols) + [order_col, tie_col]))
     out_schema = T.StructType([by_name[c] for c in out_names])
-    if not keep:
-        return spark.createDataFrame([], out_schema).select(*use_cols)
-    buckets_df = spark.createDataFrame(
-        sorted(keep),
-        T.StructType([T.StructField("bucket", T.LongType(), False),
-                      T.StructField("all_match", T.BooleanType(), False)])
-    ).repartition(len(keep))
-    partials = buckets_df.mapInArrow(
+    partials = _launch(
+        spark, pa.RecordBatch.from_pylist(
+            [{"bucket": b, "all_match": m} for b, m in sorted(keep)]),
         _make_topk_kernel(out_dir, order_col, tie_col, out_names, k,
                           descending, order_float_type, preds),
         out_schema)
@@ -2083,21 +2087,18 @@ def _aggregate(spark: SparkSession, out_dir: str,
     rows = [(int(r["bucket"]), True) for r in full] if groups else []
     rows += [(int(r["bucket"]), False) for r in partial]
     if groups and not rows:
-        return spark.createDataFrame([], out_schema)
+        return _arrow_frame(spark, [], out_schema)
     # ungrouped, the driver row joins the kernel's partials only when
     # proven buckets exist (a union costs a Spark stage); with no bucket
     # at all it alone is the answer
     partials = None if groups or (rows and not full) \
-        else spark.createDataFrame([tuple(_zone_partials(
+        else _arrow_frame(spark, [tuple(_zone_partials(
             [(r["columns"], int(r["n_rows"])) for r in full], specs))],
             out_schema)
     if rows:
-        buckets_df = spark.createDataFrame(
-            sorted(rows),
-            T.StructType([T.StructField("bucket", T.LongType(), False),
-                          T.StructField("all_match", T.BooleanType(), False)])
-        ).repartition(len(rows))
-        kernel_df = buckets_df.mapInArrow(
+        kernel_df = _launch(
+            spark, pa.RecordBatch.from_pylist(
+                [{"bucket": b, "all_match": m} for b, m in sorted(rows)]),
             _make_group_multi_kernel(out_dir, groups, specs, preds),
             out_schema)
         partials = (kernel_df if partials is None
@@ -2356,12 +2357,9 @@ def decode_table(
         committed = _prune_buckets(nonempty, predicates)
     else:
         committed = sorted(int(r["bucket"]) for r in nonempty)
-    buckets_df = spark.createDataFrame(
-        [(b,) for b in committed], T.StructType([T.StructField("bucket", T.LongType(), False)])
-    ).repartition(max(1, len(committed)))
-    return buckets_df.mapInArrow(
-        _make_decode_kernel(out_dir, list(columns), predicates), out_schema
-    )
+    return _launch(
+        spark, pa.RecordBatch.from_pydict({"bucket": committed}),
+        _make_decode_kernel(out_dir, list(columns), predicates), out_schema)
 
 
 def store_view(spark: SparkSession, out_dir: str, name: str,
@@ -2449,7 +2447,7 @@ def metrics_table(spark: SparkSession, out_dir: str) -> DataFrame:
         )
     recs = _lineage_records_df(spark, manifest, meta["plan_hash"])
     if recs is None:
-        return spark.createDataFrame([], METRICS_SCHEMA)
+        return _arrow_frame(spark, [], METRICS_SCHEMA)
     parsed = recs.select(
         "bucket", F.from_json("record", _LINEAGE_RECORD_SCHEMA).alias("r"))
     # empty-bucket commits have columns == {} and drop out of the explode,

@@ -174,6 +174,14 @@ def test_one_bucket_per_task_broadcast_path(spark, monkeypatch):
     assert set(planned.columns) == {"id", engine.BUCKET_COL}
 
 
+def _assert_kernel_launch_only(plan: str) -> None:
+    """A kernel frame is spark.range -> mapInArrow: no exchange of any
+    kind, and no pickled Python-list scan (createDataFrame(list) plans a
+    ``Scan ExistingRDD`` behind an identity-map Python stage)."""
+    assert "Exchange" not in plan, plan
+    assert "ExistingRDD" not in plan, plan
+
+
 def test_direct_encode_has_no_data_exchange(spark, tmpdir_clean):
     from flowforge import engine
 
@@ -181,9 +189,62 @@ def test_direct_encode_has_no_data_exchange(spark, tmpdir_clean):
         spark, f"{SF_DIR}/documents.parquet", tmpdir_clean, target_rows=10_000
     )
     plan = _formatted(lazy)
-    # the only exchange allowed is the roundrobin spread of the tiny plan
-    # rows; the table bytes themselves never cross an exchange
-    assert "hashpartitioning" not in plan, plan
+    _assert_kernel_launch_only(plan)
+    assert "MapInArrow" in plan and "Range" in plan, plan
+
+
+def test_resumed_noop_encode_is_a_local_scan(spark, tmpdir_clean):
+    """A resumed direct encode with nothing left to do returns its empty
+    metrics from a LocalTableScan: no Python stage, no task."""
+    from flowforge import engine
+
+    src = f"{SF_DIR}/documents.parquet"
+    assert engine.run_encode_path(spark, src, tmpdir_clean, target_rows=10_000)
+    lazy = engine.encode_path(spark, src, tmpdir_clean)
+    plan = _formatted(lazy)
+    assert "LocalTableScan" in plan, plan
+    assert "Scan ExistingRDD" not in plan and "MapInArrow" not in plan, plan
+    assert lazy.collect() == []
+
+
+@pytest.fixture(scope="module")
+def docs_store(spark, tmp_path_factory):
+    """Four salted buckets: their zone maps are wide, so a range predicate
+    leaves boundary buckets for the kernel."""
+    from flowforge import engine
+
+    out = str(tmp_path_factory.mktemp("plans")) + "/store"
+    engine.run_encode(spark, spark.read.parquet(f"{SF_DIR}/documents.parquet"),
+                      out, buckets=4, salt_col="doc_id")
+    return out
+
+
+def test_decode_has_no_exchange(spark, docs_store):
+    from flowforge import engine
+
+    df = engine.decode_table(spark, docs_store, ["doc_id", "lang"])
+    _assert_kernel_launch_only(_formatted(df))
+    assert df.count() == spark.read.parquet(
+        f"{SF_DIR}/documents.parquet").count()
+
+
+def test_topk_has_no_exchange(spark, docs_store):
+    from flowforge import engine
+
+    df = engine.topk_table(spark, docs_store, "n_chars", 5,
+                           tie_col="doc_id", columns=["doc_id", "n_chars"])
+    _assert_kernel_launch_only(_formatted(df))
+    assert len(df.collect()) == 5
+
+
+def test_boundary_group_multi_kernel_has_no_exchange(spark, docs_store):
+    from flowforge import engine
+
+    preds = {"n_chars": (100, 2000)}
+    assert engine.count_plan(docs_store, preds)["partial"]  # boundary buckets
+    kernel = engine.group_multi_table(spark, docs_store, ["lang"],
+                                      predicates=preds, merge=False)
+    _assert_kernel_launch_only(_formatted(kernel))
 
 
 def test_bucketed_tables_join_without_exchange(spark, tmpdir_clean):
