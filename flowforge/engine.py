@@ -227,7 +227,12 @@ def _launch(spark: SparkSession, work: pa.RecordBatch, kernel,
     """Run ``kernel`` with task i on slice i of the work rows (one row per
     task by default). ``spark.range(0, n, 1, n)`` puts id i alone in
     partition i: one map stage, no exchange, no balls-in-bins. The rows
-    ride in the closure, which PySpark broadcasts once over 1 MB."""
+    ride in the closure, which PySpark broadcasts once over 1 MB.
+
+    Each task still pays PySpark's per-task worker set-up, which ends in
+    ``importlib.invalidate_caches()``; the guard ``import flowforge``
+    installs keeps that from re-reading ``pyspark.zip`` on a worker's warm
+    tasks (``flowforge._guard_zip_invalidation``)."""
     slices = _task_slices(work.num_rows, n_tasks or work.num_rows)
     if not slices:
         return _arrow_frame(spark, [], schema)

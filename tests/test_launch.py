@@ -85,3 +85,41 @@ def test_no_hidden_python_stage_in_engine_sources():
     owners = _calls_by_function(os.path.join(PKG, "engine.py"),
                                 "repartition")
     assert set(owners) == {"_partition_one_bucket_per_task"}, owners
+
+
+def test_warm_tasks_do_not_reread_zip_archives(spark):
+    """Every task runs ``importlib.invalidate_caches()`` before its kernel;
+    with the guard ``import flowforge`` installs, a worker's later tasks
+    read no zip archive directory (pyspark.zip holds about 16 importers)."""
+    schema = T.StructType([T.StructField("pid", T.LongType()),
+                           T.StructField("reads", T.LongType())])
+
+    def kernel(batches):
+        import zipimport
+
+        import flowforge  # noqa: F401  -- the worker imports the package
+
+        reads = getattr(zipimport, "_launch_test_reads", None)
+        if reads is None:  # first task on this worker: start counting
+            reads = zipimport._launch_test_reads = []
+            stock_read = zipimport._read_directory
+
+            def counting(path):
+                reads.append(path)
+                return stock_read(path)
+
+            zipimport._read_directory = counting
+            seen = -1
+        else:
+            seen = len(reads)
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({
+                "pid": pa.array([os.getpid()] * b.num_rows, pa.int64()),
+                "reads": pa.array([seen] * b.num_rows, pa.int64())})
+
+    work = pa.RecordBatch.from_pydict({"i": list(range(4))})
+    warm = [(r["pid"], r["reads"]) for _ in range(3)
+            for r in engine._launch(spark, work, kernel, schema).collect()
+            if r["reads"] >= 0]
+    assert warm, "no worker ran two tasks"
+    assert all(reads == 0 for _, reads in warm), warm
