@@ -722,6 +722,34 @@ def _src_fingerprint(files: list[str]) -> str:
     return h.hexdigest()[:12]
 
 
+def _parquet_spark_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path).schema`` would report, read
+    from the file's footer on the driver without running a Spark job.
+
+    ``spark.read.parquet`` infers a schema with a one-task job even for a
+    single file (``ParquetUtils.inferSchema`` -> ``mergeSchemasInParallel``);
+    this runs the conversion that job runs on each file: Spark's own
+    ``readSchemaFromFooter`` with a converter built from the session's
+    parquet confs, so e.g. a pyarrow ``timestamp[us]`` still reads as
+    ``timestamp_ntz``. ``asNullable`` matches ``HadoopFsRelation``'s data
+    schema."""
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    parquet = jvm.org.apache.parquet
+    spark_parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    footer = spark_parquet.ParquetFooterReader.readFooter(
+        parquet.hadoop.util.HadoopInputFile.fromPath(
+            hpath, state.newHadoopConf()),
+        parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    file_format = getattr(getattr(spark_parquet, "ParquetFileFormat$"),
+                          "MODULE$")
+    schema = file_format.readSchemaFromFooter(
+        parquet.hadoop.Footer(hpath, footer),
+        spark_parquet.ParquetToSparkSchemaConverter(state.conf()))
+    return T.StructType.fromJson(json.loads(schema.asNullable().json()))
+
+
 def plan_direct(src: str | list[str], target_rows: int) -> list[dict]:
     """Deterministic bucket plan from parquet footers: each bucket is a run
     of contiguous row groups of one file totaling >= target_rows.
@@ -797,6 +825,13 @@ def encode_path(
     left at None (the parallelism-derived default applies only to NEW
     stores), must match them when explicit, and refuses a source whose
     file list/sizes changed since the first encode.
+
+    Planning runs no Spark job: the bucket plan comes from the parquet
+    footers, and the Spark schema stored in ``table.json`` from the first
+    file's footer (:func:`_parquet_spark_schema`). So an encode is one job,
+    the returned map stage, and a resumed encode with nothing left to do
+    is none. ``columns`` (default: every source column) sets the stored
+    columns and their order; a name the source lacks raises ValueError.
     """
     files = _list_parquet(src)
     if not files:
@@ -838,8 +873,13 @@ def encode_path(
     plan = plan_direct(files, target_rows)
     if not plan:
         raise ValueError(f"no parquet row groups found under {src!r}")
-    sample_df = spark.read.parquet(plan[0]["file"])
-    use_cols = columns or sample_df.columns
+    src_schema = _parquet_spark_schema(spark, plan[0]["file"])
+    use_cols = columns or src_schema.names
+    unknown = [c for c in use_cols if c not in src_schema.names]
+    if unknown:
+        raise ValueError(
+            f"columns {unknown} are not in {plan[0]['file']} "
+            f"(it has {src_schema.names})")
     plan_if_new = {
         "format": FORMAT_VERSION, "mode": "direct", "buckets": len(plan),
         "chunk_rows": chunk_rows, "target_rows": target_rows,
@@ -849,7 +889,8 @@ def encode_path(
         manifest, existing, plan_if_new,
         {"buckets": len(plan), "chunk_rows": chunk_rows,
          "target_rows": target_rows, "sort_col": sort_col},
-        use_cols, sample_df.select(*use_cols).schema.jsonValue(), out_dir,
+        use_cols, T.StructType([src_schema[c] for c in use_cols]).jsonValue(),
+        out_dir,
     )
     committed = manifest.committed_buckets(phash) if resume else set()
     todo = [p for p in plan if p["bucket"] not in committed]
@@ -2389,7 +2430,9 @@ def _lineage_records_df(spark: SparkSession, manifest: Manifest,
     10^6-bucket scale the format targets that is millions of driver-side
     dicts for what is a parquet scan).
 
-    Compacted logs are read with ``spark.read.parquet``; still-uncompacted
+    Compacted logs are read with ``spark.read.parquet`` under their fixed
+    schema (``Manifest.compact`` writes ``bucket bigint, record string``),
+    so building the frame runs no schema-inference job; still-uncompacted
     delta files (bounded between compactions, one JSON line each) with
     ``spark.read.text``. Duplicate buckets resolve exactly like
     ``Manifest._newer``: larger ``committed_at`` wins, deterministic text
@@ -2401,7 +2444,8 @@ def _lineage_records_df(spark: SparkSession, manifest: Manifest,
              for b, ph, n in manifest._delta_files() if ph == phash]
     parts = []
     if comp:
-        parts.append(spark.read.parquet(*comp).select("bucket", "record"))
+        parts.append(spark.read.schema("bucket bigint, record string")
+                     .parquet(*comp))
     if delta:
         parts.append(spark.read.text(delta).select(
             F.get_json_object("value", "$.bucket").cast("long")

@@ -3,11 +3,17 @@
 Usage:
     spark-submit --py-files flowforge.zip jobs/encode.py \
         --input <parquet path or dir> --out <chunk store dir> \
-        [--buckets N] [--chunk-rows N] [--salt-col url] [--no-resume]
+        [--chunk-rows N] [--sort-col C] [--no-resume]
+    ... [--mode salted [--salt-col url] | --mode clustered --cluster-col C]
+        [--buckets N]
 
-Reads the source web-pages table, runs the salted repartition ->
-sortWithinPartitions -> mapInArrow encode plan, prints the per-column
-compression report and a one-line JSON summary.
+The default direct mode encodes the source's parquet row groups in place,
+one Spark job with no shuffle (``engine.run_encode_path``); its bucket plan
+comes from the row groups and the core count, so ``--buckets``,
+``--salt-col`` and ``--cluster-col`` are refused there. The salted and
+clustered modes shuffle once onto url-hash or quantile-range buckets
+(``engine.run_encode``). Prints the per-column compression report and a
+one-line JSON summary.
 """
 
 from __future__ import annotations
@@ -21,7 +27,7 @@ from pyspark.sql import SparkSession
 from flowforge import engine
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--out", required=True)
@@ -42,7 +48,15 @@ def main() -> None:
                     help="clustered mode: int-ordered column (e.g. warc_ts) "
                          "whose quantiles define the bucket ranges")
     ap.add_argument("--no-resume", action="store_true")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+    if args.mode == "direct":
+        ignored = [flag for flag, value in (
+            ("--buckets", args.buckets), ("--salt-col", args.salt_col),
+            ("--cluster-col", args.cluster_col)) if value is not None]
+        if ignored:
+            ap.error(f"direct mode would ignore {', '.join(ignored)}: it "
+                     "plans its buckets from the source's row groups; add "
+                     "--mode salted or --mode clustered")
 
     spark = SparkSession.builder.appName("flowforge-encode").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -9,8 +9,11 @@ here is invisible at sf0.01 but catastrophic at 1000 executors.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import re
 import sys
+import uuid
 
 import pytest
 
@@ -205,6 +208,73 @@ def test_resumed_noop_encode_is_a_local_scan(spark, tmpdir_clean):
     assert "LocalTableScan" in plan, plan
     assert "Scan ExistingRDD" not in plan and "MapInArrow" not in plan, plan
     assert lazy.collect() == []
+
+
+@contextlib.contextmanager
+def _spark_jobs(spark):
+    """Yields a list that, when the block exits, holds the ids of the Spark
+    jobs the block ran (one job group, read from ``statusTracker`` after
+    the listener bus has drained)."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fresh_direct_encode_is_one_job(spark, tmpdir_clean):
+    """The kernel's map stage is the only job: the Spark schema stored in
+    table.json comes from the source's footer, not from the one-task
+    schema-inference job of ``spark.read.parquet``."""
+    from flowforge import engine
+
+    with _spark_jobs(spark) as jobs:
+        rows = engine.run_encode_path(spark, f"{SF_DIR}/documents.parquet",
+                                      tmpdir_clean, target_rows=10_000)
+    assert rows
+    assert len(jobs) == 1, jobs
+
+
+def test_resumed_noop_encode_runs_no_job(spark, tmpdir_clean):
+    from flowforge import engine
+
+    src = f"{SF_DIR}/documents.parquet"
+    assert engine.run_encode_path(spark, src, tmpdir_clean, target_rows=10_000)
+    with _spark_jobs(spark) as jobs:
+        assert engine.run_encode_path(spark, src, tmpdir_clean) == []
+    assert jobs == [], jobs
+
+
+def test_unknown_encode_column_fails_before_any_job(spark, tmpdir_clean):
+    from flowforge import engine
+    from flowforge.catalog import Manifest
+
+    with _spark_jobs(spark) as jobs:
+        with pytest.raises(ValueError, match="no_such_col"):
+            engine.encode_path(spark, f"{SF_DIR}/documents.parquet",
+                               tmpdir_clean, target_rows=10_000,
+                               columns=["doc_id", "no_such_col"])
+    assert jobs == [], jobs
+    assert Manifest(tmpdir_clean).try_read_table_meta() is None
+
+
+def test_building_metrics_table_runs_no_job(spark, tmpdir_clean):
+    """The compacted commit logs are read under their fixed schema: only
+    an action on the frame runs a job."""
+    from flowforge import engine
+
+    engine.run_encode_path(spark, f"{SF_DIR}/documents.parquet",
+                           tmpdir_clean, target_rows=10_000)
+    assert glob.glob(f"{tmpdir_clean}/_manifest/compacted-*.parquet")
+    with _spark_jobs(spark) as jobs:
+        df = engine.metrics_table(spark, tmpdir_clean)
+    assert jobs == [], jobs
+    assert df.count() > 0
 
 
 @pytest.fixture(scope="module")
